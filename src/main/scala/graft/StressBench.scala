@@ -525,17 +525,9 @@ object StressBench {
         // aborts). Sort-merge handles it; the TIMED 1× leg below keeps
         // the production plan untouched.
         val spark = docs.sparkSession
-        // restore-by-unset when a key was never set: fabricating a
-        // concrete default here (the r13 "64MB" bug) leaked a
-        // plan-affecting AQE conf into every probe timed after this
-        // memoized build — when unset, adaptive broadcast falls back to
-        // the non-adaptive threshold, and only unset restores that
-        val keys = Seq(
-          "spark.sql.autoBroadcastJoinThreshold",
-          "spark.sql.adaptive.autoBroadcastJoinThreshold")
-        val prev = keys.map(k => k -> spark.conf.getOption(k))
-        keys.foreach(spark.conf.set(_, "-1"))
-        try
+        SessionConf.withConf(spark,
+            "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
           graft.streaming.CdcStream.ingestPipelineApplyBatch(
             corpus, 0L, s"$d/store", s"$d/semidx", "doc_id", "text", "hh", "emb",
             k = 10, minDocsBoiler = 5, w = 4, windowSize = 3, minShared = 3,
@@ -545,9 +537,6 @@ object StressBench {
             // session's full shuffle width (the timed 1× leg below keeps
             // the production micro-batch default)
             shuffleWidth = 32)
-        finally prev.foreach {
-          case (key, Some(v)) => spark.conf.set(key, v)
-          case (key, None)    => spark.conf.unset(key)
         }
       }
       val b = batchDocs.join(batchEmbs, batchDocs("doc_id") === batchEmbs("vec_id"))

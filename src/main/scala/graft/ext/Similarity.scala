@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
+import graft.Overlap
 import graft.functions.GraftFunctions
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -19,20 +20,6 @@ import graft.functions.GraftFunctions
   * re-scored exactly, so recall loss comes only from bucket misses.
   */
 object Similarity {
-
-  /** Daemon pool for overlapping independent sub-quantizer fits
-    * ([[pqCodebooks]]) — each submitted thunk drives its own chain of
-    * Spark jobs; the scheduler interleaves their tasks like any
-    * multi-session workload (the [[graft.streaming.CdcStream]]
-    * appendPool discipline). Daemon threads so an exiting application
-    * never hangs on an idle pool. */
-  private lazy val fitPool: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newCachedThreadPool(r => {
-        val t = new Thread(r, "graft-sim-fit")
-        t.setDaemon(true)
-        t
-      }))
 
   /** Exact cosine top-k neighbors for each query vector.
     *
@@ -406,10 +393,7 @@ object Similarity {
       // another's tasks (guide: overlap independent jobs). Results are
       // awaited and assembled in subspace order, so the codebook table
       // is bit-identical to the sequential build's.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: scala.concurrent.ExecutionContext = fitPool
-      val perSub = (0 until m).map { s => Future {
+      Overlap.all((0 until m).map { s => () =>
         val sub = train.select(
           array_to_vector(slice(col("__v"), s * dsub + 1, dsub)).as("features"))
         val km = new KMeans().setK(kEff).setSeed(seed + s).setMaxIter(10)
@@ -424,9 +408,7 @@ object Similarity {
         padded.zipWithIndex.map { case (v, c) =>
           (s, c, v.toArray.map(_.toFloat).toSeq)
         }
-      } }
-      Await.result(Future.sequence(perSub), Duration.Inf)
-        .flatten.toDF("sub", "code", "c_vec")
+      }).flatten.toDF("sub", "code", "c_vec")
     } finally { train.unpersist(); () }
   }
 
@@ -490,18 +472,6 @@ object Similarity {
     * m·ksub rows (the documented-bounded-collect convention — a codebook
     * is sketch-sized state, never data-sized).
     */
-  /** Daemon pool for overlapping a probe's INDEPENDENT preliminary
-    * driver actions (guide §2.6 — the [[graft.ext.TextOps]] probePool
-    * convention). Daemon threads: an exiting application must not hang
-    * on an idle pool. */
-  private lazy val probePool: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newCachedThreadPool(r => {
-        val t = new Thread(r, "graft-sim-probe")
-        t.setDaemon(true)
-        t
-      }))
-
   private def pqLocal(codebooks: DataFrame, m: Int, ksub: Int): Column = {
     val rows = codebooks.select("sub", "code", "c_vec").collect()
     require(rows.length == m * ksub,
@@ -675,12 +645,10 @@ object Similarity {
     // codebook collect inside pqLocal — share no inputs, so they run as
     // two concurrent jobs (guide §2.6, the bm25TopKStored pattern): the
     // probe construction pays the slower round-trip, not the sum
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val dimFut = Future(scala.util.Try(
-      queries.select(size(col(vecCol))).head().getInt(0)))(probePool)
-    val cbLit = pqLocal(codebooks, m, ksub)
-    val dim = Await.result(dimFut, Duration.Inf).get
+    val (cbLit, dim) = Overlap.scope { s =>
+      val dimFork = s.fork(queries.select(size(col(vecCol))).head().getInt(0))
+      (pqLocal(codebooks, m, ksub), s.await(dimFork))
+    }
     require(dim % m == 0, s"m=$m must divide the embedding dim $dim")
     val dsub = dim / m
     val qtabExpr =

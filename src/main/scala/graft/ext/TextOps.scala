@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
+import graft.Overlap
+
 /** Text-analysis operators for training-data pipelines: language ID
   * (stopword n-gram heuristic), quality scoring, token counting
   * (whitespace + BPE-ish regex), and document fingerprinting.
@@ -312,28 +314,6 @@ object TextOps {
     val shingles = transform(
       sequence(lit(0), greatest(size(words) - w, lit(0))),
       i => xxhash64(concat_ws(" ", slice(words, i + 1, lit(w))))
-    )
-    array_distinct(
-      transform(
-        sequence(lit(0), greatest(size(shingles) - windowSize, lit(0))),
-        i => array_min(slice(shingles, i + 1, lit(windowSize)))
-      )
-    )
-  }
-
-  /** Portable winnowing fingerprint set — the same window-min selection
-    * as [[winnowingFingerprints]] through md5 hex (the
-    * [[fingerprintPortable]] discipline: lexicographic min on fixed-width
-    * lowercase hex is identical in Spark and DuckDB), so the
-    * winnowing-based pair join can carry a full value oracle. xxhash64
-    * stays the production fingerprint. Same single-doc caveat as
-    * [[winnowingFingerprints]] — the pair join stages via
-    * [[graft.ext.Dedup.winnowingPostings]]. */
-  def winnowingFingerprintsPortable(text: Column, w: Int = 5, windowSize: Int = 4): Column = {
-    val words = split(trim(text), "\\s+")
-    val shingles = transform(
-      sequence(lit(0), greatest(size(words) - w, lit(0))),
-      i => md5(concat_ws(" ", slice(words, i + 1, lit(w))))
     )
     array_distinct(
       transform(
@@ -1093,21 +1073,6 @@ object TextOps {
     bm25TopKTail(bm25PerDoc(perTerm), k)
   }
 
-  /** Daemon pool for overlapping a probe's INDEPENDENT preliminary
-    * driver actions (guide §2.6 — actions are only sequential because
-    * driver code calls them sequentially): the stored BM25 probe's
-    * (n, sum_dl) stats fold and its query-term collect share no inputs,
-    * so running them as two concurrent Spark jobs cuts one full driver
-    * round-trip from every probe. Daemon threads: an exiting
-    * application must not hang on an idle pool. */
-  private lazy val probePool: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newCachedThreadPool(r => {
-        val t = new Thread(r, "graft-bm25-probe")
-        t.setDaemon(true)
-        t
-      }))
-
   /** Marker file inside a persisted BM25 index recording its bucket
     * layout. */
   private val Bm25Marker = "_GRAFT_BM25_INDEX"
@@ -1234,26 +1199,19 @@ object TextOps {
     // missing.
     import spark.implicits._
     val sidecar = bm25BlockSidecar(spark.read.parquet(s"$path/postings")).cache()
-    try {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      val writes: Seq[() => Unit] = Seq(
-        () => sidecar
-          .repartition(numBuckets, col("tb"))
-          .sortWithinPartitions("term", "blk")
-          .write.mode("overwrite").partitionBy("tb").parquet(s"$path/blockmax"),
-        () => sidecar
-          .groupBy("term", "tb").agg(sum(col("n_rows")).as("df"))
-          .repartition(numBuckets, col("tb"))
-          .sortWithinPartitions("term")
-          .write.mode("overwrite").partitionBy("tb").parquet(s"$path/dict"),
-        () => Seq((buildN, statsRow.getLong(1))).toDF("n", "sum_dl")
-          .write.mode("overwrite").parquet(s"$path/stats"))
-      val settled = writes
-        .map(w => Future(scala.util.Try(w()))(probePool))
-        .map(f => Await.result(f, Duration.Inf))
-      settled.foreach(_.get)
-    } finally sidecar.unpersist()
+    try Overlap.all(Seq(
+      () => sidecar
+        .repartition(numBuckets, col("tb"))
+        .sortWithinPartitions("term", "blk")
+        .write.mode("overwrite").partitionBy("tb").parquet(s"$path/blockmax"),
+      () => sidecar
+        .groupBy("term", "tb").agg(sum(col("n_rows")).as("df"))
+        .repartition(numBuckets, col("tb"))
+        .sortWithinPartitions("term")
+        .write.mode("overwrite").partitionBy("tb").parquet(s"$path/dict"),
+      () => Seq((buildN, statsRow.getLong(1))).toDF("n", "sum_dl")
+        .write.mode("overwrite").parquet(s"$path/stats")))
+    finally sidecar.unpersist()
     writeBm25BlockMaxMarker(spark, path, blockSize)
     ()
   }
@@ -1408,26 +1366,26 @@ object TextOps {
     // (a 1-row-per-batch table) and the query-term collect — share no
     // inputs, so they run as two concurrent jobs (§2.6): the probe pays
     // the slower of the two round-trips, not the sum
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val statsFut = Future(scala.util.Try(
-      spark.read.parquet(s"$path/stats")
-        .agg(
-          coalesce(sum(col("n")), lit(0L)).as("n"),
-          coalesce(sum(col("sum_dl")), lit(0L)).as("sum_dl"))
-        .head()))(probePool)
-    val qterms = bm25QueryTerms(queries, queryIdCol, queryTextCol)
-      .withColumn("tb", pmod(xxhash64(col("term")), lit(numBuckets)).cast("int"))
-    // bounded collect: one row per (query, distinct term) at most
-    // (queries are broadcast-small by contract) — collected ONCE and
-    // re-issued below as a LITERAL frame. Joining the lazy `qterms`
-    // instead would re-evaluate the query table's full lineage in every
-    // scoring join and every block-max certification round (in the
-    // gates that lineage is a corpus scan per round).
-    val qRows = qterms.select("q_id", "term", "tb").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSeq
+    val (qRows, statsRow) = Overlap.scope { s =>
+      val stats = s.fork(
+        spark.read.parquet(s"$path/stats")
+          .agg(
+            coalesce(sum(col("n")), lit(0L)).as("n"),
+            coalesce(sum(col("sum_dl")), lit(0L)).as("sum_dl"))
+          .head())
+      val qterms = bm25QueryTerms(queries, queryIdCol, queryTextCol)
+        .withColumn("tb", pmod(xxhash64(col("term")), lit(numBuckets)).cast("int"))
+      // bounded collect: one row per (query, distinct term) at most
+      // (queries are broadcast-small by contract) — collected ONCE and
+      // re-issued below as a LITERAL frame. Joining the lazy `qterms`
+      // instead would re-evaluate the query table's full lineage in every
+      // scoring join and every block-max certification round (in the
+      // gates that lineage is a corpus scan per round).
+      val rows = qterms.select("q_id", "term", "tb").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSeq
+      (rows, s.await(stats))
+    }
     val qTerm = qRows.map(r => (r._2, r._3)).distinct
-    val statsRow = Await.result(statsFut, Duration.Inf).get
     val n = statsRow.getLong(0)
     require(n > 0, s"BM25 index at $path holds an empty corpus")
     val avgdl = statsRow.getLong(1).toDouble / n.toDouble

@@ -73,11 +73,18 @@ object GraftFunctions {
     }
   )
 
-  def register(spark: SparkSession): Unit =
+  /** Idempotent: a name whose registry entry is already THIS builder (by
+    * reference — a re-registration, or a session cloned from a
+    * registered one) is skipped, so per-query calls neither churn the
+    * registry nor log a replacement each time. Any other entry under the
+    * name is replaced, and Spark logs that replacement. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     builders.foreach { case (name, b) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, b, "built-in")
+      if (!registry.lookupFunctionBuilder(FunctionIdentifier(name)).exists(_ eq b))
+        registry.createOrReplaceTempFunction(name, b, "built-in")
     }
+  }
 
   /** Cosine similarity of two `array<float>` columns (codegen'd). The
     * session must have called [[register]] (all graft query entry points do).

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Tables
+import graft.SessionConf.withConf
 import graft.capture.CdcCapture
 import graft.sink.JsonEnvelope
 
@@ -339,10 +340,8 @@ object CdcQueries {
       // gate-scoped shuffle width (the x_scd2_stream treatment): the
       // apply leg is one PK join of ≤100k-row frames — 8-way cuts the
       // fixed per-task setup 4× with no effect on the result (restored
-      // in finally)
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      try {
+      // on exit)
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val delivery = JsonEnvelope
           .withKey(
             JsonEnvelope.withTopic(JsonEnvelope.encode(log, "event_log"), "event_log"),
@@ -371,7 +370,7 @@ object CdcQueries {
           .cache()
         applied.count()
         applied
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
     },
 
     // End-to-end: envelope mapping → id assignment → partitioned log
@@ -553,10 +552,8 @@ object CdcQueries {
       // gate-scoped shuffle width: the micro-batched runs pay
       // per-partition task/state setup on every batch, and the
       // ~60k-event fixture doesn't need 32-way shuffles (batch results
-      // are partitioning-independent; restored in finally)
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      try {
+      // are partitioning-independent; restored on exit)
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         // two lifecycle runs, not three: run 2 both RESTARTS from the
         // checkpoint and RE-DELIVERS the last slice of run 1 (must be a
         // no-op), so restart recovery and at-least-once idempotence are
@@ -565,7 +562,7 @@ object CdcQueries {
         // per-batch state-store instantiation)
         CdcLog.append(log.where(col("event_id") <= c1), logPath); runOnce()
         CdcLog.append(log.where(col("event_id") > c1 - 50), logPath); runOnce()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       s.read.parquet(statePath)
         .select(col("rid"), col("user_id"), col("cents"),
           col("valid_from_id"), col("valid_to_id"), col("is_current"))
@@ -604,11 +601,9 @@ object CdcQueries {
       // gate-scoped shuffle width: the stream-stream join instantiates a
       // state store per shuffle partition per micro-batch (2 batches
       // here) — 8 wide is plenty for the sf0.1 corpus and cuts the
-      // per-batch state/task setup 4× (restored in finally)
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 8)
+      // per-batch state/task setup 4× (restored on exit)
       val sinkName = "ivj_" + java.lang.Long.toHexString(System.nanoTime())
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val joined = CdcStream.intervalJoin(
           stream(s"$base/l"), stream(s"$base/r"),
           keys = Seq("user_id"), tsCol = "ts", lookback = "4 hours", watermark = "90 days")
@@ -617,7 +612,7 @@ object CdcQueries {
           .option("checkpointLocation", s"$base/ckpt")
           .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       s.table(sinkName)
         .select(col("user_id"), col("event_id").as("l_id"), col("r_event_id").as("r_id"),
           unix_micros(col("ts")).as("l_ts_us"), unix_micros(col("r_ts")).as("r_ts_us"))

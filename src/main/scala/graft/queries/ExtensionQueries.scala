@@ -4,7 +4,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-import graft.Tables
+import graft.{Overlap, Tables}
+import graft.SessionConf.withConf
 import graft.ext.{Dedup, Multimodal, Similarity, TextOps}
 import graft.functions.GraftFunctions
 
@@ -327,9 +328,7 @@ object ExtensionQueries {
         .select("media_id", "dhash")
       val base = java.nio.file.Files.createTempDirectory("graft_hamstream").toString
       val in = s"$base/in"
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         // one AvailableNow run, two micro-batches via maxFilesPerTrigger
         // (oldest file first) — half the query start/stop cost
         writeOrderedBatches(index, batch, in)
@@ -339,7 +338,7 @@ object ExtensionQueries {
           s"$base/idx", s"$base/out", s"$base/ckpt",
           "media_id", "dhash", radius = 11, trigger = Trigger.AvailableNow())
         q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       s.read.parquet(s"$base/out/ingest_batch=1")
         .select(col("id").as("media_id"), col("dhash"), col("status"))
         .orderBy("media_id")
@@ -539,9 +538,7 @@ object ExtensionQueries {
           concat(lit("xdupsalt "), col("text")).as("text"))
       val base = java.nio.file.Files.createTempDirectory("graft_substr_stream").toString
       val in = s"$base/in"
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         // both files land before ONE AvailableNow run drains them as two
         // micro-batches (maxFilesPerTrigger=1, oldest file first) — the
         // same two-batch incremental lifecycle at HALF the streaming
@@ -558,7 +555,7 @@ object ExtensionQueries {
           s"$base/gramidx", s"$base/out", s"$base/ckpt",
           k = 10, hashKey = true, trigger = Trigger.AvailableNow())
         q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       // explicit projection: the output table is partitioned by
       // ingest_batch (the per-batch idempotent-replay layout), which is
       // lineage metadata, not part of the stripped-corpus contract
@@ -1282,42 +1279,30 @@ object ExtensionQueries {
       // is one independent probe+recall count over the cached corpus /
       // index / codes, and running them sequentially leaves the cluster
       // idle through eight job tails (guide: overlap independent jobs).
-      // Values and output order are unchanged — the futures are awaited
+      // Values and output order are unchanged — the points are awaited
       // into the same fixed point list.
       indexed.count()
       codes.count()
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(8, r => {
-        val t = new Thread(r, "graft-recall-point"); t.setDaemon(true); t
-      })
-      // every point settles (Try) before anything is awaited past or
-      // unpersisted: Future.sequence over raw futures fails FAST, which
-      // would drop the shared caches out from under the seven points
-      // still running (forcing full lineage recomputation on daemon
-      // threads nothing joins). The first failure is surfaced only after
-      // all eight have finished and the caches are released.
-      val settled: Seq[scala.util.Try[(String, Int, Double)]] = try {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        Await.result(Future.sequence(Seq(
-          ("ivf_np1", 80, () => recall(ivf(1))),
-          ("ivf_np2", 84, () => recall(ivf(2))),
-          ("ivf_np4", 87, () => recall(ivf(4))),
-          ("ivfpq_np4_c32", 80, () => recall(ivfpq(4, 32))),
-          ("lsh_p8_mp0", 15, () => recall(lsh(0))),
-          ("lsh_p8_mp1", 40, () => recall(lsh(1))),
-          ("pq_c16", 45, () => recall(pq(16))),
-          ("pq_c64", 85, () => recall(pq(64)))
-        ).map { case (mth, floor, f) =>
-          Future(scala.util.Try((mth, floor, f())))
-        }), Duration.Inf)
-      } finally pool.shutdown()
-      exact.unpersist()
-      codes.unpersist()
-      indexed.unpersist()
-      e.unpersist()
-      val points: Seq[(String, Int, Double)] = settled.map(_.get)
+      // every point settles before the shared caches are unpersisted
+      // ([[graft.Overlap.all]]): a fail-fast await would drop them out
+      // from under the points still running, forcing full lineage
+      // recomputation on threads nothing joins
+      val points: Seq[(String, Int, Double)] = try Overlap.all(Seq(
+        ("ivf_np1", 80, () => recall(ivf(1))),
+        ("ivf_np2", 84, () => recall(ivf(2))),
+        ("ivf_np4", 87, () => recall(ivf(4))),
+        ("ivfpq_np4_c32", 80, () => recall(ivfpq(4, 32))),
+        ("lsh_p8_mp0", 15, () => recall(lsh(0))),
+        ("lsh_p8_mp1", 40, () => recall(lsh(1))),
+        ("pq_c16", 45, () => recall(pq(16))),
+        ("pq_c64", 85, () => recall(pq(64)))
+      ).map { case (mth, floor, f) => () => (mth, floor, f()) })
+      finally {
+        exact.unpersist()
+        codes.unpersist()
+        indexed.unpersist()
+        e.unpersist()
+      }
       val byName = points.map(p => p._1 -> p._3).toMap
       val prevInFamily = Map(
         "ivf_np2" -> "ivf_np1", "ivf_np4" -> "ivf_np2",
@@ -1461,9 +1446,7 @@ object ExtensionQueries {
             array_join(slice(split(trim(col("text")), "\\s+"), 1, 4), " ")).as("qtext"))
       val base = java.nio.file.Files.createTempDirectory("graft_bm25_stream").toString
       val in = s"$base/in"
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         // one AvailableNow run, two micro-batches via maxFilesPerTrigger
         // (oldest file first) — half the query start/stop cost
         writeOrderedBatches(
@@ -1475,7 +1458,7 @@ object ExtensionQueries {
           s"$base/idx", s"$base/ckpt", "doc_id", "text",
           numBuckets = 16, trigger = Trigger.AvailableNow())
         q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       TextOps.bm25TopKStored(s, s"$base/idx", queries, "q_id", "qtext", k = 1)
         .select(col("q_id"), col("doc_id"), col("tf_sum"), col("n_terms"))
         .orderBy("q_id")
@@ -1532,9 +1515,7 @@ object ExtensionQueries {
         ).as("text"))
       val base = java.nio.file.Files.createTempDirectory("graft_bp_stream").toString
       val in = s"$base/in"
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         // one AvailableNow run, two micro-batches via maxFilesPerTrigger
         // (oldest file first) — half the query start/stop cost
         writeOrderedBatches(
@@ -1546,7 +1527,7 @@ object ExtensionQueries {
           s"$base/counts", s"$base/out", s"$base/ckpt", "doc_id", "text",
           minDocs = 5, numBuckets = 16, trigger = Trigger.AvailableNow())
         q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       s.read.parquet(s"$base/out")
         .select("doc_id", "n_paras", "kept_paras", "stripped_text")
         .orderBy("doc_id")
@@ -1800,9 +1781,7 @@ object ExtensionQueries {
       val batch2 = odd.unionByName(snapCopies).unionByName(batchCopies)
       val base = java.nio.file.Files.createTempDirectory("graft_winnow_stream").toString
       val in = s"$base/in"
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         // one AvailableNow run, two micro-batches via maxFilesPerTrigger
         // (oldest file first) — half the query start/stop cost
         writeOrderedBatches(even, batch2, in)
@@ -1813,7 +1792,7 @@ object ExtensionQueries {
           maxDf = 8L, numBuckets = 16, portable = true,
           trigger = Trigger.AvailableNow())
         q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       s.read.parquet(s"$base/out").select("id", "status").orderBy("id")
     },
 
@@ -1935,9 +1914,7 @@ object ExtensionQueries {
         Dedup.semanticSeeds(ref, "vec_id", "embedding", 64),
         s"$base/semidx")
       val in = s"$base/in"
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         // two id-monotone files, ONE AvailableNow run: maxFilesPerTrigger=1
         // turns them into micro-batches 0 and 1 (oldest file first), at a
         // single streaming-query start/stop
@@ -1952,7 +1929,7 @@ object ExtensionQueries {
           hashKey = false, portable = true,
           trigger = Trigger.AvailableNow())
         q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       s.read.parquet(s"$base/store/admitted")
         .select("doc_id", "final_text", "winnow_status",
           "perceptual_status", "semantic_status", "admitted")
@@ -2150,16 +2127,13 @@ object ExtensionQueries {
       // count sized to THIS rollup's key cardinality (the per-partition
       // state-store commit is the fixed cost here; 32 near-empty stores
       // would triple the gate's wall time for no parallelism gain).
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val q =
-        try {
-          s.conf.set("spark.sql.shuffle.partitions", "8")
-          graft.streaming.CdcStream.continuousAggregate(
-            stream, "ts", "1 hour", "2 hours", "event_type",
-            s"$work/state", s"$work/ckpt",
-            trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-            valueCol = "value_cents")
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      val q = withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+        graft.streaming.CdcStream.continuousAggregate(
+          stream, "ts", "1 hour", "2 hours", "event_type",
+          s"$work/state", s"$work/ckpt",
+          trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
+          valueCol = "value_cents")
+      }
       q.awaitTermination(); q.stop()
       s.read.parquet(s"$work/state")
         .select(col("win_start"), col("event_type"), col("n"), col("total"))
@@ -2817,56 +2791,54 @@ object ExtensionQueries {
         val m = floor(col("value") * 10000 + 0.5).cast("long")
         ev.where(col("event_id") % 4 =!= 0).coalesce(2).write.parquet(rawDir)
         val rawA = s.read.parquet(rawDir)
-        // gate-wide shuffle width (restored in the outer finally below):
+        // gate-wide shuffle width (restored on exit):
         // besides the streaming leg's per-partition state stores, the
         // SERVE query and its materializing write run inside this gate
         // too — r10 scoped the narrow width to the stream only and left
         // the serve legs paying 32-way task setup over a few hundred
         // rollup rows
-        val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        try {
-        val q = CdcStream.rollupMaintain(
-          s.readStream.schema(rawA.schema).parquet(rawDir),
-          "ts", "1 hour", "90 days", Seq("event_type"),
-          floor(col("value") * 10000 + 0.5).cast("long"),
-          s"$base/state", s"$base/ckpt", Trigger.AvailableNow())
-        q.awaitTermination()
-        val rollup = s.read.parquet(s"$base/state")
-        RollupRewrite.register("events_cagg_stream", RollupRewrite.Spec(
-          rawA.inputFiles.toSet, rollup.queryExecution.analyzed,
-          Seq("event_type"), "ts", "hour",
-          RollupRewrite.canonicalMeasure(rawA, m),
-          measureExpr = Some(RollupRewrite.resolvedMeasure(rawA, m))))
-        RollupRewrite.install(s)
-        ev.where(col("event_id") % 4 === 0).coalesce(1)
-          .write.mode("append").parquet(rawDir)
-        val rawAB = s.read.parquet(rawDir)
-        val q2 = rawAB
-          .groupBy(col("event_type"), date_trunc("day", col("ts")).as("d"))
-          .agg(
-            count(lit(1)).as("n"), sum(m).as("sum_e4"),
-            min(m).as("min_e4"), max(m).as("max_e4"),
-            min_by(m, col("ts")).as("open_e4"),
-            max_by(m, col("ts")).as("close_e4"))
-          .select(col("event_type"), expr("unix_seconds(d)").as("day_s"),
-            col("n"), col("sum_e4"), col("min_e4"), col("max_e4"),
-            col("open_e4"), col("close_e4"))
-          .orderBy("event_type", "day_s")
-        // the base temp name also appears in the raw/tail paths, so
-        // assert specifically that a scan of the STATE table is present
-        val servedFromState = q2.queryExecution.optimizedPlan.collect {
-          case l: org.apache.spark.sql.execution.datasources.LogicalRelation
-              if l.relation.asInstanceOf[
-                org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-                .location.inputFiles.exists(_.contains(s"${new java.io.File(base).getName}/state")) => l
+        withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+          val q = CdcStream.rollupMaintain(
+            s.readStream.schema(rawA.schema).parquet(rawDir),
+            "ts", "1 hour", "90 days", Seq("event_type"),
+            floor(col("value") * 10000 + 0.5).cast("long"),
+            s"$base/state", s"$base/ckpt", Trigger.AvailableNow())
+          q.awaitTermination()
+          val rollup = s.read.parquet(s"$base/state")
+          RollupRewrite.register("events_cagg_stream", RollupRewrite.Spec(
+            rawA.inputFiles.toSet, rollup.queryExecution.analyzed,
+            Seq("event_type"), "ts", "hour",
+            RollupRewrite.canonicalMeasure(rawA, m),
+            measureExpr = Some(RollupRewrite.resolvedMeasure(rawA, m))))
+          RollupRewrite.install(s)
+          ev.where(col("event_id") % 4 === 0).coalesce(1)
+            .write.mode("append").parquet(rawDir)
+          val rawAB = s.read.parquet(rawDir)
+          val q2 = rawAB
+            .groupBy(col("event_type"), date_trunc("day", col("ts")).as("d"))
+            .agg(
+              count(lit(1)).as("n"), sum(m).as("sum_e4"),
+              min(m).as("min_e4"), max(m).as("max_e4"),
+              min_by(m, col("ts")).as("open_e4"),
+              max_by(m, col("ts")).as("close_e4"))
+            .select(col("event_type"), expr("unix_seconds(d)").as("day_s"),
+              col("n"), col("sum_e4"), col("min_e4"), col("max_e4"),
+              col("open_e4"), col("close_e4"))
+            .orderBy("event_type", "day_s")
+          // the base temp name also appears in the raw/tail paths, so
+          // assert specifically that a scan of the STATE table is present
+          val servedFromState = q2.queryExecution.optimizedPlan.collect {
+            case l: org.apache.spark.sql.execution.datasources.LogicalRelation
+                if l.relation.asInstanceOf[
+                  org.apache.spark.sql.execution.datasources.HadoopFsRelation]
+                  .location.inputFiles.exists(_.contains(s"${new java.io.File(base).getName}/state")) => l
+          }
+          require(servedFromState.nonEmpty,
+            "stream-maintained rollup was not served by the rewrite")
+          val out = java.nio.file.Files.createTempDirectory("graft-caggserve-out").toString
+          q2.write.mode("overwrite").parquet(out)
+          s.read.parquet(out).orderBy("event_type", "day_s")
         }
-        require(servedFromState.nonEmpty,
-          "stream-maintained rollup was not served by the rewrite")
-        val out = java.nio.file.Files.createTempDirectory("graft-caggserve-out").toString
-        q2.write.mode("overwrite").parquet(out)
-        s.read.parquet(out).orderBy("event_type", "day_s")
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
       } finally RollupRewrite.clear()
     },
 
@@ -2899,9 +2871,7 @@ object ExtensionQueries {
       }
       // gate-scoped shuffle width (the x_scd2_stream idiom): per-batch
       // sketch merges over a few hundred buckets don't need 32-way tasks
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         runOnce()
         ev.where(col("event_id") % 4 === 0).coalesce(1).write.mode("append").parquet(rawDir)
         runOnce()
@@ -2939,7 +2909,7 @@ object ExtensionQueries {
             rankOk("le_m95", 0.95).as("m95_rank_ok"))
           .write.mode("overwrite").parquet(out)
         s.read.parquet(out).orderBy("event_type", "day_s")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
     },
 
     // Candlestick open/close THROUGH the transparent rewrite —

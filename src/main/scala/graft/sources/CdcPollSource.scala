@@ -207,14 +207,21 @@ final class CdcPollMicroBatchStream(
       case None => CdcPollOffset.Zero
     }
 
+  /** Every committed parquet file under the log root. Hidden names —
+    * a leading `_` or `.` without an `=` (Spark's own file-index rule,
+    * which keeps `event_date=` partitions) — are skipped: an append in
+    * progress stages its half-written files under `_temporary/`, and
+    * opening one fails the query ("is not a Parquet file"). */
   private def listParquetFiles(): Seq[FileStatus] = {
     val root = new Path(path)
     val fs = root.getFileSystem(hadoopConf)
     if (!fs.exists(root)) return Seq.empty
+    def hidden(name: String) =
+      (name.startsWith("_") || name.startsWith(".")) && !name.contains("=")
     val out = Seq.newBuilder[FileStatus]
     val stack = scala.collection.mutable.Stack(root)
     while (stack.nonEmpty) {
-      fs.listStatus(stack.pop()).foreach { st =>
+      fs.listStatus(stack.pop()).filterNot(st => hidden(st.getPath.getName)).foreach { st =>
         if (st.isDirectory) stack.push(st.getPath)
         else if (st.getPath.getName.endsWith(".parquet")) out += st
       }

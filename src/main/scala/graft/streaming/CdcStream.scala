@@ -5,6 +5,8 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
+import graft.Overlap
+import graft.SessionConf.withConf
 import graft.sink.JsonEnvelope
 import graft.views.EventViews
 
@@ -43,46 +45,6 @@ object CdcStream {
     * buying no pruning. Results are identical either way (the bucket
     * filter was always an optimization over the key semi-join). */
   private val PruneCollectMinBuckets = 33
-
-  /** Daemon pool the composed pipeline parks its deferred store appends
-    * and tail writes on — each submitted thunk runs one Spark action, so
-    * concurrency is bounded by the handful of stages per trigger; the
-    * scheduler interleaves their tasks across the executor cores like
-    * any multi-session workload. Daemon threads: an exiting application
-    * must not hang on an idle pool. */
-  private lazy val appendPool: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newCachedThreadPool(r => {
-        val t = new Thread(r, "graft-pipeline-append")
-        t.setDaemon(true)
-        t
-      }))
-
-  /** Run a staged stage's partition writes CONCURRENTLY and release the
-    * stage caches only after every write has settled. The writes are
-    * disjoint tables (the stage's own output partition + its store's
-    * own `ingest_batch=` partition), each overwrites its own batch
-    * partition, and nothing in the same trigger reads them (probes
-    * filter `ingest_batch < batchId`, and store file listings are
-    * frozen at stage-entry `spark.read` resolution) — so order never
-    * mattered for replay, only for wall: sequential writes made the
-    * trigger pay the SUM of the two I/O walls where it only owes the
-    * MAX (guide §2.6, the bm25IndexApplyBatch discipline extended to
-    * every staged maintainer). Failure semantics are unchanged: the
-    * first failure rethrows after all writes settle, the trigger fails,
-    * foreachBatch redelivers, and every write absorbs the redelivery
-    * idempotently whichever subset the crashed attempt completed.
-    */
-  private def concurrentAppends(writes: Seq[() => Unit])(cleanup: () => Unit): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    try {
-      val settled = writes
-        .map(w => Future(scala.util.Try(w()))(appendPool))
-        .map(f => Await.result(f, Duration.Inf))
-      settled.foreach(_.get)
-    } finally cleanup()
-  }
 
   /** Open the log directory as a micro-batch stream. */
   def readLogStream(spark: SparkSession, logPath: String, schema: StructType): DataFrame =
@@ -819,14 +781,14 @@ object CdcStream {
       // fans out across all numBuckets partition dirs (tasks × buckets
       // small files per trigger — the small-file explosion that kills
       // streaming tables); clustered by gb, each task owns whole buckets
-      // the two writes run concurrently — [[concurrentAppends]]
-      val append = () => concurrentAppends(Seq(
+      // the two writes run concurrently — [[graft.Overlap.all]]
+      val append: () => Unit = () => try Overlap.all(Seq(
         () => kept.write.mode("overwrite").parquet(s"$outPath/ingest_batch=$batchId"),
         () => newGrams
           .select("g", "gb")
           .repartition(buckets, col("gb"))
           .write.mode("overwrite").partitionBy("gb")
-          .parquet(s"$indexPath/ingest_batch=$batchId")))(() => cleanup())
+          .parquet(s"$indexPath/ingest_batch=$batchId"))) finally cleanup()
       (kept, append)
     } catch { case e: Throwable => cleanup(); throw e }
   }
@@ -955,13 +917,13 @@ object CdcStream {
         .hammingAdmitBanded(bandedIndex, b, idCol, hashCol, radius, blocks, probeBits)
       // eager under keepOutput — the boilerplateApplyBatchStaged note
       val kept = if (keepOutput) out.localCheckpoint(eager = true) else out
-      // the two writes run concurrently — [[concurrentAppends]]
-      val append = () => concurrentAppends(Seq(
+      // the two writes run concurrently — [[graft.Overlap.all]]
+      val append: () => Unit = () => try Overlap.all(Seq(
         () => kept.write.mode("overwrite").parquet(s"$outPath/ingest_batch=$batchId"),
         () => Dedup.hammingIndexBanded(b, idCol, hashCol, blocks)
           .repartition(col("blk"))
           .write.mode("overwrite").partitionBy("blk")
-          .parquet(s"$indexPath/ingest_batch=$batchId")))(() => cleanup())
+          .parquet(s"$indexPath/ingest_batch=$batchId"))) finally cleanup()
       (kept, append)
     } catch { case e: Throwable => cleanup(); throw e }
   }
@@ -1196,13 +1158,13 @@ object CdcStream {
       val kept = if (keepOutput) out.localCheckpoint(eager = true) else out
       // one file per bucket dir: clustered by fb so a write task owns
       // whole buckets instead of fanning small files across partitions.
-      // The two writes run concurrently — [[concurrentAppends]]
-      val append = () => concurrentAppends(Seq(
+      // The two writes run concurrently — [[graft.Overlap.all]]
+      val append: () => Unit = () => try Overlap.all(Seq(
         () => kept.write.mode("overwrite").parquet(s"$outPath/ingest_batch=$batchId"),
         () => posts.select("id", "fp", "fb")
           .repartition(buckets, col("fb"))
           .write.mode("overwrite").partitionBy("fb")
-          .parquet(s"$indexPath/ingest_batch=$batchId")))(() => cleanup())
+          .parquet(s"$indexPath/ingest_batch=$batchId"))) finally cleanup()
       (kept, append)
     } catch { case e: Throwable => cleanup(); throw e }
   }
@@ -1298,33 +1260,21 @@ object CdcStream {
         .withColumn("tb", pmod(xxhash64(col("term")), lit(buckets)).cast("int"))
         .cache()
       try {
-        // the three partial writes are independent (disjoint tables,
-        // each overwriting its own batch partition — replay-idempotent
-        // in any order) and all read the cached tf/batch frames: run
-        // them concurrently so the trigger pays the slowest write, not
-        // the sum (the ingestPipelineApplyBatch deferred-append rule)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: scala.concurrent.ExecutionContext = appendPool
-        Await.result(Future.sequence(Seq(
-          Future {
-            // one file per bucket dir (the substringStripMaintain
-            // fan-out rule)
-            tf.repartition(buckets, col("tb"))
-              .write.mode("overwrite").partitionBy("tb")
-              .parquet(s"$indexPath/postings/ingest_batch=$batchId")
-          },
-          Future {
-            tf.groupBy("term", "tb").agg(count(lit(1)).as("df"))
-              .repartition(buckets, col("tb"))
-              .write.mode("overwrite").partitionBy("tb")
-              .parquet(s"$indexPath/dict/ingest_batch=$batchId")
-          },
-          Future {
-            TextOps.bm25StatsPartial(b, textCol)
-              .write.mode("overwrite")
-              .parquet(s"$indexPath/stats/ingest_batch=$batchId")
-          })), Duration.Inf)
+        // the three partial writes are independent and all read the
+        // cached tf/batch frames: run them concurrently so the trigger
+        // pays the slowest write, not the sum ([[graft.Overlap.all]])
+        Overlap.all(Seq(
+          // one file per bucket dir (the substringStripMaintain rule)
+          () => tf.repartition(buckets, col("tb"))
+            .write.mode("overwrite").partitionBy("tb")
+            .parquet(s"$indexPath/postings/ingest_batch=$batchId"),
+          () => tf.groupBy("term", "tb").agg(count(lit(1)).as("df"))
+            .repartition(buckets, col("tb"))
+            .write.mode("overwrite").partitionBy("tb")
+            .parquet(s"$indexPath/dict/ingest_batch=$batchId"),
+          () => TextOps.bm25StatsPartial(b, textCol)
+            .write.mode("overwrite")
+            .parquet(s"$indexPath/stats/ingest_batch=$batchId")))
       } finally { tf.unpersist(); () }
     } finally { b.unpersist(); () }
     ()
@@ -1480,13 +1430,13 @@ object CdcStream {
       // partition + store append) leave the critical path as deferred
       // I/O over the materialized blocks
       val kept = if (keepOutput) out.localCheckpoint(eager = true) else out
-      // the two writes run concurrently — [[concurrentAppends]]
-      val append = () => concurrentAppends(Seq(
+      // the two writes run concurrently — [[graft.Overlap.all]]
+      val append: () => Unit = () => try Overlap.all(Seq(
         () => kept.write.mode("overwrite").parquet(s"$outPath/ingest_batch=$batchId"),
         () => own
           .repartition(buckets, col("pb"))
           .write.mode("overwrite").partitionBy("pb")
-          .parquet(s"$countsPath/ingest_batch=$batchId")))(() => cleanup())
+          .parquet(s"$countsPath/ingest_batch=$batchId"))) finally cleanup()
       (kept, append)
     } catch { case e: Throwable => cleanup(); throw e }
   }
@@ -1611,8 +1561,6 @@ object CdcStream {
       hashKey: Boolean,
       portable: Boolean,
       shuffleWidth: Int = 8): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
     val spark = batch.sparkSession
     val b = batch.select(
       col(idCol).cast("long").as("doc_id"),
@@ -1643,11 +1591,11 @@ object CdcStream {
     // compute runs once, there) and then EVERY parquet write — the four
     // stage outputs, the four store appends (disjoint stores; nothing
     // this trigger reads them — probes filter ingest_batch < batchId),
-    // sstat and the final admitted table — is deferred to the append
-    // pool as I/O over materialized blocks, all mutually concurrent.
-    // The trigger still commits only after EVERY future completes —
-    // Await below rethrows the first failure so foreachBatch fails and
-    // redelivers, which each stage absorbs idempotently. Critical path:
+    // sstat and the final admitted table — is forked off as I/O over
+    // materialized blocks, all mutually concurrent. The trigger still
+    // commits only after EVERY fork completes — the overlap scope
+    // rethrows the first failure so foreachBatch fails and redelivers,
+    // which each stage absorbs idempotently. Critical path:
     // 4 × (touched-collect + checkpoint-compute) + the semantic screen
     // + the slowest deferred write.
     // Batch-scoped shuffle width: every frame this trigger shuffles is
@@ -1665,8 +1613,7 @@ object CdcStream {
     // layouts are width-independent — every store append repartitions
     // by its explicit bucket column count. foreachBatch hands the
     // stream's own cloned session, so the override never leaks into
-    // concurrent queries; the deferred writes all run inside the
-    // barrier, under the override.
+    // concurrent queries.
     // ... but the override is scaled by the batch's ACTUAL volume: a
     // genuinely large trigger (Trigger.AvailableNow draining a backlog,
     // a bursty source, a backfill replay) through 8 tasks is capped
@@ -1676,41 +1623,25 @@ object CdcStream {
     // overlaps their jobs and doubles as the batch cache's first
     // materialization), and the probe legs themselves are
     // width-indifferent — off the critical path, batch-sized shuffles.
-    var prevConf: Seq[(String, Option[String])] = Nil
-    val pending = scala.collection.mutable.ArrayBuffer.empty[Future[Unit]]
-    def defer(a: () => Unit): Unit = pending += Future(a())(appendPool)
-    val probeFutures = scala.collection.mutable.ArrayBuffer.empty[Future[_]]
     val probeCleanups = new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
-    // opt-in per-stage wall profiling (spark.graft.pipeline.profile=true)
-    val profile = spark.conf.getOption("spark.graft.pipeline.profile").contains("true")
-    var lapT0 = System.nanoTime()
-    def lap(tag: String): Unit =
-      if (profile) {
-        val t = System.nanoTime()
-        println(f"[pipeline] batch=$batchId $tag ${(t - lapT0) / 1e9}%.2f s")
-        lapT0 = t
-      }
-    try {
-      // micro-batch width override BEFORE the probe legs launch: the
-      // legs run queries on the shared session, and setting the
-      // override after they start meant a probe plan picked up EITHER
-      // the session width or the override depending on thread timing
-      // (results unaffected — batch-sized shuffles — but probe wall and
-      // the width story were nondeterministic). Setting it here makes
-      // every probe plan deterministically a micro-batch plan; the
-      // backlog escalation below can only RAISE the width for the
-      // doc-flow stages once the overlapped count lands (a backlog
-      // trigger's probe legs keep the micro-batch width — AQE re-splits
-      // their oversized shuffles, and the legs are off the critical
-      // path either way).
-      val sessionWidth =
-        spark.conf.getOption("spark.sql.shuffle.partitions").map(_.toInt)
-          .getOrElse(spark.sparkContext.defaultParallelism)
-      prevConf = Seq(
-        "spark.sql.shuffle.partitions" -> shuffleWidth.toString
-      ).map { case (key, v) =>
-        val prev = spark.conf.getOption(key); spark.conf.set(key, v); key -> prev
-      }
+    val sessionWidth =
+      spark.conf.getOption("spark.sql.shuffle.partitions").map(_.toInt)
+        .getOrElse(spark.sparkContext.defaultParallelism)
+    // micro-batch width override BEFORE the probe legs launch: the legs
+    // run queries on the shared session, and setting the override after
+    // they start meant a probe plan picked up EITHER the session width or
+    // the override depending on thread timing (results unaffected —
+    // batch-sized shuffles — but probe wall and the width story were
+    // nondeterministic). Setting it here makes every probe plan
+    // deterministically a micro-batch plan; the backlog escalation below
+    // can only RAISE the width for the doc-flow stages once the
+    // overlapped count lands (a backlog trigger's probe legs keep the
+    // micro-batch width — AQE re-splits their oversized shuffles, and the
+    // legs are off the critical path either way). The overlap scope nests
+    // INSIDE the override: every query this trigger forks — probe legs
+    // and deferred writes — has drained before the width is restored.
+    val microWidth = "spark.sql.shuffle.partitions" -> shuffleWidth.toString
+    try withConf(spark, microWidth)(Overlap.scope { s =>
       // Stages 4 and 5 probe SPECULATIVELY on the FULL batch, launched
       // here so they run concurrent with the boiler→gram→winnow doc
       // flow: the perceptual and semantic probes read b's sketch and
@@ -1725,7 +1656,7 @@ object CdcStream {
       // ~free: the width-8 text stages leave most of the executor idle.
       // The critical path drops from five sequential stage constants to
       // three plus two cheap post-join checkpoints.
-      val hamFut = Future {
+      val hamProbe = s.fork {
         val bandedIndex = readHammingStore(
           spark, s"$storeRoot/ham", batchId, radius, blocks = 4, probeBits = 2)
         val bb = b.select(col("doc_id"), col("__hh"))
@@ -1737,9 +1668,8 @@ object CdcStream {
           .select("id_a", "id_b")
           .localCheckpoint(true)
         (snap, pairs)
-      }(appendPool)
-      probeFutures += hamFut
-      val semFut = Future {
+      }
+      val semProbe = s.fork {
         val (assigned, snapIds, pairIds, cleanup) = graft.ext.Dedup
           .semanticProbePhaseStored(
             spark, semanticIndexPath,
@@ -1748,8 +1678,7 @@ object CdcStream {
         val snap = snapIds.localCheckpoint(true)
         val pairs = pairIds.localCheckpoint(true)
         (assigned, snap, pairs)
-      }(appendPool)
-      probeFutures += semFut
+      }
       // backlog escalation AFTER the probe legs launch: the count job
       // (the cached batch's first materialization) overlaps their probe
       // jobs instead of preceding everything. Only the doc-flow stages
@@ -1758,7 +1687,6 @@ object CdcStream {
       val effectiveWidth = pipelineWidthFor(bCount, shuffleWidth, sessionWidth)
       if (effectiveWidth != shuffleWidth)
         spark.conf.set("spark.sql.shuffle.partitions", effectiveWidth.toString)
-      lap("width")
       // 1. boilerplate strip (cumulative count store). keepOutput=false —
       // the FUSION that removes one sequential job from the critical
       // path: the boiler output is handed to stage 2 LAZILY, so stage
@@ -1771,7 +1699,6 @@ object CdcStream {
         b.select("doc_id", "text"), batchId,
         s"$storeRoot/counts", s"$storeRoot/clean1", "doc_id", "text",
         minDocsBoiler, "\n", numBuckets, keepOutput = false)
-      lap("boiler")
       val clean1 = clean1Raw.select(col("doc_id"), col("stripped_text").as("text"))
       // 2. exact-substring dedup + strip (gram store)
       // probe-broadcast hint from the count the width step already ran:
@@ -1796,9 +1723,8 @@ object CdcStream {
       // the boiler append is deferred only HERE — after stage 2's eager
       // checkpoint has consumed the lazy boiler output — because its
       // finally releases the paragraph cache that checkpoint scans
-      defer(bpAppend)
-      defer(gramAppend)
-      lap("gram")
+      s.fork(bpAppend())
+      s.fork(gramAppend())
       val clean2 = clean2Raw.select(col("doc_id"), col("stripped_text"))
       // 3. winnowing fuzzy-text admission (fingerprint store)
       val (wstatRaw, winAppend) = winnowAdmitApplyBatchStaged(
@@ -1806,10 +1732,9 @@ object CdcStream {
         s"$storeRoot/win", s"$storeRoot/wstat", "doc_id", "text",
         w, windowSize, minShared, maxDf, numBuckets, portable, keepOutput = true,
         broadcastProbe = Some(bCount <= graft.ext.Dedup.ProbeBroadcastMaxBatchRows))
-      defer(winAppend)
+      s.fork(winAppend())
       val wstat = wstatRaw.select(col("id").as("doc_id"), col("status").as("winnow_status"))
       val surv3 = wstat.where(col("winnow_status") === "new").select("doc_id")
-      lap("winnow")
       // 4. perceptual admission FINALIZE: restrict the speculative
       // full-batch artifacts to the winnow survivors — snapshot hits are
       // pointwise (filter the rows), in-batch pairs need BOTH endpoints
@@ -1817,8 +1742,7 @@ object CdcStream {
       // existed in the survivors-only probe). Output rows, statuses and
       // the store append are bit-identical to running the staged stage
       // on the survivor set.
-      val (hamSnap, hamPairs) = Await.result(hamFut, Duration.Inf)
-      lap("await_ham")
+      val (hamSnap, hamPairs) = s.await(hamProbe)
       val hamBatchHit = hamPairs
         .join(surv3.select(col("doc_id").as("id_a")), Seq("id_a"), "left_semi")
         .join(surv3.select(col("doc_id").as("id_b")), Seq("id_b"), "left_semi")
@@ -1843,10 +1767,10 @@ object CdcStream {
         .localCheckpoint(eager = true)
       // two independent deferred writes (disjoint tables), not one
       // sequential thunk — the barrier pays the slower, not the sum
-      defer { () =>
+      s.fork {
         hstatRaw.write.mode("overwrite").parquet(s"$storeRoot/hstat/ingest_batch=$batchId")
       }
-      defer { () =>
+      s.fork {
         // index advance: the SURVIVORS' banded rows (the staged stage's
         // append contract — non-survivors never reach the store)
         graft.ext.Dedup
@@ -1860,13 +1784,11 @@ object CdcStream {
       val hstat = hstatRaw
         .select(col("id").as("doc_id"), col("status").as("perceptual_status"))
       val surv4 = hstat.where(col("perceptual_status") === "new").select("doc_id")
-      lap("finalize_ham")
       // 5. semantic screen FINALIZE — same restriction, against the
       // stage-4 survivors. EAGER checkpoint so the two tail writes below
       // run CONCURRENTLY over materialized blocks; the probe leg's
       // assignment cache is released right after.
-      val (semAssigned, semSnap, semPairs) = Await.result(semFut, Duration.Inf)
-      lap("await_sem")
+      val (semAssigned, semSnap, semPairs) = s.await(semProbe)
       val semBatchHit = semPairs
         .join(surv4.select(col("doc_id").as("id_a")), Seq("id_a"), "left_semi")
         .join(surv4.select(col("doc_id").as("id_b")), Seq("id_b"), "left_semi")
@@ -1887,10 +1809,8 @@ object CdcStream {
       // assignment cache no longer referenced — sstat is materialized
       probeCleanups.forEach(c => c())
       probeCleanups.clear()
-      lap("finalize_sem")
-      pending += Future(
-        sstat.write.mode("overwrite").parquet(s"$storeRoot/sstat/ingest_batch=$batchId")
-      )(appendPool)
+      s.fork(
+        sstat.write.mode("overwrite").parquet(s"$storeRoot/sstat/ingest_batch=$batchId"))
       val admitted = b.select("doc_id")
         .join(clean2, Seq("doc_id"), "left_outer")
         .join(wstat, Seq("doc_id"), "left_outer")
@@ -1905,32 +1825,17 @@ object CdcStream {
           (col("winnow_status") === "new" &&
             coalesce(col("perceptual_status"), lit("skipped")) === "new" &&
             coalesce(col("semantic_status"), lit("skipped")) === "new").as("admitted"))
-      pending += Future(
+      s.fork(
         admitted.write.mode("overwrite")
-          .parquet(s"$storeRoot/admitted/ingest_batch=$batchId")
-      )(appendPool)
-      // the commit barrier: every deferred write must be durable before
-      // foreachBatch returns, or a "committed" batch could be missing
-      // store partitions or outputs its probes and consumers assume
-      pending.foreach(f => Await.result(f, Duration.Inf))
-      lap("barrier")
-    } finally {
-      // a failed stage can leave deferred appends AND speculative probe
-      // legs in flight — let them drain before dropping the batch cache
-      // they read, then release any probe-leg caches the success path
-      // never got to (on success the queue is already empty)
-      pending.foreach(f => try { Await.result(f, Duration.Inf); () } catch { case _: Throwable => () })
-      probeFutures.foreach(f => try { Await.result(f, Duration.Inf); () } catch { case _: Throwable => () })
+          .parquet(s"$storeRoot/admitted/ingest_batch=$batchId"))
+      // the scope's exit is the commit barrier: a "committed" batch must
+      // not miss store partitions or outputs its probes and consumers read
+    }) finally {
+      // every fork has settled; release any probe-leg caches the success
+      // path never got to (on success the queue is already empty)
       probeCleanups.forEach(c => try c() catch { case _: Throwable => () })
       probeCleanups.clear()
       b.unpersist()
-      // restore-by-unset when a key was never set (the r13 conf-leak
-      // lesson): every query this trigger ran — deferred writes
-      // included — has drained by here
-      prevConf.foreach {
-        case (key, Some(v)) => spark.conf.set(key, v)
-        case (key, None)    => spark.conf.unset(key)
-      }
     }
     ()
   }
@@ -2203,7 +2108,7 @@ object CdcStream {
   }
 
   /** Offline compaction for the [[bm25IndexMaintain]] index — all three
-    * sub-tables, each with its own staged fold (sequential and
+    * sub-tables, each with its own staged fold (concurrent and
     * individually crash-resumable): postings are per-document facts
     * (concatenation, clustered onto `tb`), dictionary rows are per-batch
     * `(term, df)` partials the probe sums (fold = sum per term — this is
@@ -2262,58 +2167,40 @@ object CdcStream {
     // own partitions) — run dict and stats concurrently with the
     // postings fold + sidecar chain; a crash mid-parallel leaves each
     // table in a state its own re-run resolves, exactly as a crash
-    // between sequential folds did. The marker stays LAST, after every
-    // fold has committed.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = appendPool
-    val sideFolds = Seq(
-      Future(scala.util.Try(
-        compactBatchedTable(spark, s"$indexPath/dict", upToBatch, Seq("tb"),
-          _.groupBy("term", "tb").agg(sum(col("df")).as("df"))
-            .select("term", "df", "tb").repartition(col("tb"))))),
-      Future(scala.util.Try(
-        compactBatchedTable(spark, s"$indexPath/stats", upToBatch, Seq.empty,
-          _.agg(
-            coalesce(sum(col("n")), lit(0L)).as("n"),
-            coalesce(sum(col("sum_dl")), lit(0L)).as("sum_dl")).coalesce(1)))))
-    // the side folds must never outlive this call: a postings-fold or
-    // sidecar failure that propagated past a still-running dict fold
-    // would let a RETRIED compaction race the orphan on the same
-    // `.compact` staging dir (the per-table resume protocol assumes one
-    // fold at a time). Await them in the finally — the Try wrapper makes
-    // the await unconditional — and surface their first failure only
-    // after the primary path has thrown or finished.
-    var leftover = false
-    var primaryOk = false
-    try {
-      compactBatchedTable(spark, s"$indexPath/postings", upToBatch, Seq("tb"),
-        df => TextOps.bm25AssignBlocks(
-            df.select("doc_id", "dl", "term", "tf", "tb"), foldAvgdl, blockSize)
-          .repartition(col("tb"))
-          .sortWithinPartitions("term", "blk"))
-      val postingsBase = new Path(s"$indexPath/postings")
-      val fs = postingsBase.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      leftover = fs.listStatus(postingsBase)
-        .map(_.getPath.getName)
-        .filter(_.startsWith("ingest_batch="))
-        .map(_.stripPrefix("ingest_batch=").toLong)
-        .exists(_ > upToBatch)
-      if (!leftover)
-        TextOps.bm25BlockSidecar(spark.read.parquet(s"$indexPath/postings"))
-          .select("term", "blk", "max_tf", "min_dl", "n_rows", "tb")
-          .repartition(col("tb"))
-          .sortWithinPartitions("term", "blk")
-          .write.mode("overwrite").partitionBy("tb").parquet(s"$indexPath/blockmax")
-      primaryOk = true
-    } finally {
-      val settled = Await.result(Future.sequence(sideFolds), Duration.Inf)
-      // when the primary path is already unwinding, let ITS exception
-      // propagate (the folds are drained either way); otherwise surface
-      // the first side-fold failure
-      if (primaryOk) settled.foreach(_.get)
-    }
-    if (!leftover)
+    // between sequential folds did. No fold outlives this call (a retried
+    // compaction must never race an orphan on the same `.compact` staging
+    // dir), the postings chain goes first so its failure wins, and the
+    // marker stays LAST, after every fold has committed.
+    var armed = false
+    Overlap.all(Seq(
+      () => {
+        compactBatchedTable(spark, s"$indexPath/postings", upToBatch, Seq("tb"),
+          df => TextOps.bm25AssignBlocks(
+              df.select("doc_id", "dl", "term", "tf", "tb"), foldAvgdl, blockSize)
+            .repartition(col("tb"))
+            .sortWithinPartitions("term", "blk"))
+        val postingsBase = new Path(s"$indexPath/postings")
+        val fs = postingsBase.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        armed = !fs.listStatus(postingsBase)
+          .map(_.getPath.getName)
+          .filter(_.startsWith("ingest_batch="))
+          .map(_.stripPrefix("ingest_batch=").toLong)
+          .exists(_ > upToBatch)
+        if (armed)
+          TextOps.bm25BlockSidecar(spark.read.parquet(s"$indexPath/postings"))
+            .select("term", "blk", "max_tf", "min_dl", "n_rows", "tb")
+            .repartition(col("tb"))
+            .sortWithinPartitions("term", "blk")
+            .write.mode("overwrite").partitionBy("tb").parquet(s"$indexPath/blockmax")
+      },
+      () => compactBatchedTable(spark, s"$indexPath/dict", upToBatch, Seq("tb"),
+        _.groupBy("term", "tb").agg(sum(col("df")).as("df"))
+          .select("term", "df", "tb").repartition(col("tb"))),
+      () => compactBatchedTable(spark, s"$indexPath/stats", upToBatch, Seq.empty,
+        _.agg(
+          coalesce(sum(col("n")), lit(0L)).as("n"),
+          coalesce(sum(col("sum_dl")), lit(0L)).as("sum_dl")).coalesce(1))))
+    if (armed)
       TextOps.writeBm25BlockMaxMarker(spark, indexPath, blockSize)
   }
 

@@ -201,6 +201,25 @@ class CdcPollSourceSpec extends SparkSpec {
     assert(!end.lexLt(start), s"offset regressed: start=$start end=$end")
   }
 
+  test("an append in progress under _temporary/ is invisible: only committed rows stream") {
+    val logPath = tempDir("cdcpolltemp") + "/log"
+    val ckpt = tempDir("cdcpolltempckpt")
+    CdcLog.append(mkEvents(1 to 20, day = 14), logPath)
+    // what a concurrent append leaves while its task is still writing:
+    // a zero-length part file in the job's staging tree
+    val staged = new java.io.File(
+      s"$logPath/_temporary/0/_temporary/attempt_0/event_date=2025-06-15/part-00000-x.parquet")
+    assert(staged.getParentFile.mkdirs() && staged.createNewFile())
+    val q = readPoll(logPath).writeStream
+      .format("memory").queryName("polltemp")
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    val got = spark.sql("SELECT event_id FROM polltemp").as[Long].collect().sorted.toSeq
+    assert(got == (1L to 20L))
+  }
+
   test("values survive the source intact (content parity with the parquet read)") {
     val logPath = tempDir("cdcpollparity") + "/log"
     val ckpt = tempDir("cdcpollparityckpt")
