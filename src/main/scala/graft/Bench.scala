@@ -35,6 +35,19 @@ object Bench {
     math.min(once(), once())
   }
 
+  /** Wall seconds of one gate run, or what it threw: a gate that fails
+    * has no time, so a partial wall can never be booked as a fast run. */
+  private[graft] def timed(run: => Unit): Either[Throwable, Double] = {
+    val t0 = System.nanoTime()
+    try { run; Right((System.nanoTime() - t0) / 1e9) }
+    catch { case scala.util.control.NonFatal(e) => Left(e) }
+  }
+
+  /** The JSON field naming the failed gates ("" when none failed). */
+  private[graft] def failedField(failed: Seq[String]): String =
+    if (failed.isEmpty) ""
+    else failed.sorted.map("\"" + _ + "\"").mkString("\"failed\":[", ",", "],")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -133,12 +146,17 @@ object Bench {
       }
       last
     }
-    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Long) = {
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
+    // None when the gate threw: it is recorded as failed, never timed
+    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Option[Double], Long) = {
       val j0 = quiescedJobs()
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}") }
-      val t = (System.nanoTime() - t0) / 1e9
+      val t = timed(fn(spark, sfDir).write.format("noop").mode("overwrite").save()) match {
+        case Right(sec) => Some(sec)
+        case Left(e) =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          failed += name
+          None
+      }
       val jobs = quiescedJobs() - j0
       // the sketch-dedup operators cache intermediates (by design — their
       // plans fan out over them); dropping them BETWEEN queries, outside
@@ -149,11 +167,14 @@ object Bench {
       (t, jobs)
     }
     val jobsOfMin = scala.collection.mutable.Map[String, Long]()
-    val firstPass = selected.map { case (name, fn) =>
+    val firstPass = selected.flatMap { case (name, fn) =>
       val trials = (1 to runs).map(_ => timeOnce(name, fn))
-      val best = trials.minBy(_._1)
-      jobsOfMin(name) = best._2
-      (name, fn, best._1)
+      if (trials.exists(_._1.isEmpty)) None
+      else {
+        val best = trials.minBy(_._1.get)
+        jobsOfMin(name) = best._2
+        Some((name, fn, best._1.get))
+      }
     }
     // outlier re-run: this host shows occasional 2-10x noise (steal /
     // noisy neighbor) that can survive even best-of-2. Any query whose min
@@ -161,13 +182,15 @@ object Bench {
     // number is never a transient the next clean run would halve.
     val median = {
       val sorted = firstPass.map(_._3).sorted
-      sorted(sorted.size / 2)
+      if (sorted.isEmpty) 0.0 else sorted(sorted.size / 2)
     }
-    val results = firstPass.map { case (name, fn, t) =>
-      if (t > 2 * median && t > 1.0) {
-        val (t2, j2) = timeOnce(name, fn)
-        if (t2 < t) { jobsOfMin(name) = j2; name -> t2 } else name -> t
-      } else name -> t
+    val results = firstPass.flatMap { case (name, fn, t) =>
+      if (t > 2 * median && t > 1.0) timeOnce(name, fn) match {
+        case (None, _)                => None
+        case (Some(t2), j2) if t2 < t => jobsOfMin(name) = j2; Some(name -> t2)
+        case _                        => Some(name -> t)
+      }
+      else Some(name -> t)
     }
     val total = results.map(_._2).sum
     // cadence at the scale factor's natural rate, then under 10x row
@@ -205,7 +228,7 @@ object Bench {
         if (!withJobs) ""
         else keep.map { case (k, _) => "\"" + k + "\":" + jobsOfMin.getOrElse(k, -1L) }
           .mkString(""""jobs":{""", ",", "},")
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,"q_total":${results.size},"calibration_sec":${fmt(calSec)},$om"queries":$qs,$jb$cadence"sf":"${new java.io.File(sfDir).getName}"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,"q_total":${results.size},"calibration_sec":${fmt(calSec)},${failedField(failed.toSeq)}$om"queries":$qs,$jb$cadence"sf":"${new java.io.File(sfDir).getName}"}"""
     }
     System.err.println(s"[bench] full precision: " +
       results.map { case (k, v) => s"$k=$v" }.mkString(" "))
@@ -231,6 +254,10 @@ object Bench {
       } catch { case e: Throwable => System.err.println(s"[bench] BENCH_FULL.json write failed: $e") }
     } else System.err.println("[bench] subset run — BENCH_FULL.json left untouched")
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} gate(s) failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 
   /** Sustained poll cadence — the reference's one stated number is its ~5 s

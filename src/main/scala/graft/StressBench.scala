@@ -587,7 +587,7 @@ object StressBench {
     * the maintainer's own invariant), probed by one fixed 1× batch.
     * `winnow_probe_frag` probes the fragmented store directly — its
     * wall carries the listing growth; `winnow_probe_compacted` runs
-    * [[graft.streaming.CdcStream.compactWinnowStore]] at build
+    * [[graft.streaming.BatchedStore.compact]] at build
     * (untimed — the offline chore) and probes the folded
     * single-partition store, whose wall must stay ~flat (x_vs_linear
     * collapsing toward 1/Replicas). The dir count is capped at 2000:
@@ -615,7 +615,7 @@ object StressBench {
         .repartition(col("ingest_batch"), col("fb"))
         .write.partitionBy("ingest_batch", "fb").parquet(idx)
       if (compact)
-        graft.streaming.CdcStream.compactWinnowStore(spark, idx, upToBatch = nDirs - 1L)
+        graft.streaming.BatchedStore.Win.compact(spark, idx, upToBatch = nDirs - 1L)
     }
     graft.streaming.CdcStream.winnowAdmitApplyBatch(
       batchDocs.select((col("doc_id") + 1000000000000L).as("doc_id"), col("text")),

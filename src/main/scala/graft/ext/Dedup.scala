@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
 import graft.functions.GraftFunctions
+import graft.streaming.Marker
 
 /** Deduplication operators for large-scale training-data pipelines: exact,
   * MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine near-dup.
@@ -2686,7 +2687,7 @@ object Dedup {
 
   /** Marker file inside a persisted semantic-index artifact recording the
     * K it was built with. */
-  private val SemanticIndexMarker = "_GRAFT_SEMANTIC_INDEX"
+  private def semanticIndexMarker(path: String) = s"$path/_GRAFT_SEMANTIC_INDEX"
 
   /** Persist a [[semanticIndex]]/[[semanticSeeds]] pair as the stored
     * admission artifact a production pipeline keeps beside the corpus:
@@ -2700,41 +2701,28 @@ object Dedup {
     * sketch-sized, never data-sized).
     */
   def writeSemanticIndex(index: DataFrame, seeds: DataFrame, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val spark = index.sparkSession
     val k = seeds.count()
     require(k >= 1, "seed table is empty — nothing to persist")
     index.select("id", "v", "cluster")
       .write.mode("overwrite").partitionBy("cluster").parquet(s"$path/index")
     seeds.write.mode("overwrite").parquet(s"$path/seeds")
-    val marker = new Path(s"$path/$SemanticIndexMarker")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(marker, true)
-    try out.write(s"semantic_index:k=$k:v1".getBytes("UTF-8")) finally out.close()
-    ()
+    Marker.write(spark, semanticIndexMarker(path), s"semantic_index:k=$k:v1")
   }
 
   /** Read the stamped K of a [[writeSemanticIndex]] artifact. */
-  def semanticIndexK(spark: org.apache.spark.sql.SparkSession, path: String): Int = {
-    import org.apache.hadoop.fs.Path
-    val marker = new Path(s"$path/$SemanticIndexMarker")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(marker),
+  def semanticIndexK(spark: org.apache.spark.sql.SparkSession, path: String): Int =
+    Marker.readOrRefuse(spark, semanticIndexMarker(path))(
       s"no semantic-index marker at $path — the artifact was not written by " +
         "writeSemanticIndex (or predates the K stamp); rebuild it rather than " +
-        "guessing K, a mismatch probes wrong cells silently")
-    val in = fs.open(marker)
-    val got =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    got match {
-      case s if s.startsWith("semantic_index:k=") && s.endsWith(":v1") =>
-        s.stripPrefix("semantic_index:k=").stripSuffix(":v1").toInt
+        "guessing K, a mismatch probes wrong cells silently") match {
+      case SemanticIndexLayout(k) => k.toInt
       case other =>
         throw new IllegalArgumentException(
           s"unrecognized semantic-index marker '$other' at $path")
     }
-  }
+
+  private val SemanticIndexLayout = "semantic_index:k=(\\d+):v1".r
 
   /** [[semanticAdmit]] against the PERSISTED artifact — the form that
     * closes the K-mismatch hazard: the artifact carries the K it was
@@ -2816,7 +2804,7 @@ object Dedup {
 
   // ---- winnowing fingerprint index as a stored artifact ---------------------
 
-  private val WinnowIndexMarker = "_GRAFT_WINNOW_INDEX"
+  private def winnowIndexMarker(path: String) = s"$path/_GRAFT_WINNOW_INDEX"
 
   /** Persist the fingerprint-posting index behind ingestion-time
     * winnowing near-dup admission: the corpus's (fp, id) winnowing
@@ -2846,7 +2834,6 @@ object Dedup {
       buckets: Int = 64,
       portable: Boolean = false
   ): Unit = {
-    import org.apache.hadoop.fs.Path
     require(buckets >= 1, "need buckets >= 1")
     require(maxDf >= 2, "need maxDf >= 2 — pairs need fingerprints in at least 2 docs")
     val spark = docs.sparkSession
@@ -2885,9 +2872,6 @@ object Dedup {
         .repartition(buckets, col("fb"))
         .write.mode("overwrite").partitionBy("fb").parquet(s"$path/hot")
     } finally { posts.unpersist(); () }
-    val marker = new Path(s"$path/$WinnowIndexMarker")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(marker, true)
     val h = if (portable) "md5" else "xx"
     // h=xx:v1 fingerprints are defined by the STAGED contract — w-word
     // xxhash64 shingles over split(trim(text), "\s+") tokens (empty
@@ -2895,10 +2879,8 @@ object Dedup {
     // WinnowedFingerprints pass is spec-pinned bit-identical to that
     // definition (ExtSpec, incl. edge-whitespace corners), so stores
     // stamped v1 remain valid across the Column-form → native swap.
-    try out.write(
-      s"winnow_index:w=$w:ws=$windowSize:maxdf=$maxDf:b=$buckets:h=$h:v1".getBytes("UTF-8"))
-    finally out.close()
-    ()
+    Marker.write(spark, winnowIndexMarker(path),
+      s"winnow_index:w=$w:ws=$windowSize:maxdf=$maxDf:b=$buckets:h=$h:v1")
   }
 
   /** Read and parse the stamped layout of a [[writeWinnowIndex]]
@@ -2908,19 +2890,11 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession,
       path: String
   ): (Int, Int, Long, Int, Boolean) = {
-    import org.apache.hadoop.fs.Path
-    val marker = new Path(s"$path/$WinnowIndexMarker")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(marker),
+    val re = """winnow_index:w=(\d+):ws=(\d+):maxdf=(\d+):b=(\d+):h=(md5|xx):v1""".r
+    Marker.readOrRefuse(spark, winnowIndexMarker(path))(
       s"no winnowing-index marker at $path — the artifact was not written by " +
         "writeWinnowIndex; rebuild it rather than guessing the layout, a " +
-        "mismatched w/window/bucket count probes wrong fingerprints silently")
-    val in = fs.open(marker)
-    val got =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    val re = """winnow_index:w=(\d+):ws=(\d+):maxdf=(\d+):b=(\d+):h=(md5|xx):v1""".r
-    got match {
+        "mismatched w/window/bucket count probes wrong fingerprints silently") match {
       case re(w, ws, maxDf, b, h) =>
         (w.toInt, ws.toInt, maxDf.toLong, b.toInt, h == "md5")
       case other =>
@@ -3117,49 +3091,78 @@ object Dedup {
     // matching the batch's fingerprints; released with the stage cleanup)
     val prior = idx.join(posts.select("fp").distinct(), Seq("fp"), "left_semi")
       .persist()
-    val hotByCount = prior.groupBy("fp").agg(count(lit(1)).as("n"))
-      .where(col("n") > maxDf).select("fp")
     val hotDir = new org.apache.hadoop.fs.Path(s"$path/hot")
     val hotFs = hotDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val hotStored =
-      if (hotFs.exists(hotDir)) {
+      if (!hotFs.exists(hotDir)) None
+      else {
         val hs = spark.read.schema(StructType(Seq(
           StructField("fp", fpType), StructField("fb", IntegerType)))).parquet(s"$path/hot")
-        if (touched.isEmpty) hs.select("fp").limit(0)
-        else hs.where(col("fb").isin(touched: _*)).select("fp")
-      } else hotByCount.limit(0)
-    val hot = hotByCount.unionByName(hotStored).distinct()
+        Some(if (touched.isEmpty) hs.select("fp").limit(0)
+          else hs.where(col("fb").isin(touched: _*)).select("fp"))
+      }
+    val res = winnowStatuses(batch, idCol, posts, prior, minShared, maxDf, hotStored)
+    (res, () => { prior.unpersist(); posts.unpersist(); () })
+  }
+
+  /** The winnowing admission statuses of a batch — the one derivation
+    * behind [[winnowAdmitStored]] and the streamed
+    * [[graft.streaming.CdcStream.winnowAdmitMaintain]]. `posts` are the
+    * batch's `(id, fp)` postings, `prior` the stored `(fp, a_id)`
+    * postings sharing a fingerprint with them.
+    *
+    *  - hot fingerprints (more than `maxDf` prior postings — the
+    *    cumulative df cap — plus any `storedHot` set) never pair;
+    *  - `dup_snapshot`: some stored doc shares ≥ `minShared` of the
+    *    remaining fingerprints;
+    *  - `dup_batch`: an EARLIER batch doc (smaller id) shares
+    *    ≥ `minShared` fingerprints inside the in-batch df band
+    *    [2, maxDf];
+    *  - `new`: neither.
+    *
+    * `hint` wraps every batch-derived join side: the streamed stage's
+    * micro-batch broadcast hints (its pairing side is bounded by maxDf
+    * rows per batch fingerprint while its STATIC estimate derives from
+    * the store's file size, so without the hint the planner sort-merges
+    * what a materialized input would have broadcast).
+    */
+  private[graft] def winnowStatuses(
+      batch: DataFrame,
+      idCol: String,
+      posts: DataFrame,
+      prior: DataFrame,
+      minShared: Int,
+      maxDf: Long,
+      storedHot: Option[DataFrame] = None,
+      hint: DataFrame => DataFrame = identity): DataFrame = {
+    val hotByCount = prior.groupBy("fp").agg(count(lit(1)).as("n"))
+      .where(col("n") > maxDf).select("fp")
+    val hot = storedHot.fold(hotByCount)(hotByCount.unionByName(_).distinct())
     val snapHit = posts
-      .join(prior.join(hot, Seq("fp"), "left_anti"), Seq("fp"))
-      .groupBy(col("id"), col("a_id"))
-      .agg(count(lit(1)).as("shared"))
+      .join(hint(prior.join(hint(hot), Seq("fp"), "left_anti")), Seq("fp"))
+      .groupBy("id", "a_id").agg(count(lit(1)).as("shared"))
       .where(col("shared") >= minShared)
       .select("id").distinct()
       .withColumn("__snap", lit(true))
-    val bandInBatch = posts
-      .groupBy("fp")
-      .agg(count(lit(1)).as("df"))
-      .where(col("df") >= 2 && col("df") <= maxDf)
-      .select("fp")
-    val pb = posts.join(bandInBatch, Seq("fp"), "left_semi")
+    val band = posts.groupBy("fp").agg(count(lit(1)).as("df"))
+      .where(col("df") >= 2 && col("df") <= maxDf).select("fp")
+    val pb = posts.join(hint(band), Seq("fp"), "left_semi")
     val batchHit = pb.select(col("id").as("id_a"), col("fp"))
-      .join(pb.select(col("id").as("id_b"), col("fp")), Seq("fp"))
+      .join(hint(pb.select(col("id").as("id_b"), col("fp"))), Seq("fp"))
       .where(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("shared"))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("shared"))
       .where(col("shared") >= minShared)
       .select(col("id_b").as("id")).distinct()
       .withColumn("__batch", lit(true))
-    val res = batch
+    batch
       .select(col(idCol).cast("long").as("id"))
-      .join(snapHit, Seq("id"), "left_outer")
-      .join(batchHit, Seq("id"), "left_outer")
+      .join(hint(snapHit), Seq("id"), "left_outer")
+      .join(hint(batchHit), Seq("id"), "left_outer")
       .select(
         col("id"),
         when(col("__snap"), lit("dup_snapshot"))
           .when(col("__batch"), lit("dup_batch"))
           .otherwise(lit("new"))
           .as("status"))
-    (res, () => { prior.unpersist(); posts.unpersist(); () })
   }
 }

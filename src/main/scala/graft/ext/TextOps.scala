@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
 import graft.Overlap
+import graft.streaming.Marker
 
 /** Text-analysis operators for training-data pipelines: language ID
   * (stopword n-gram heuristic), quality scoring, token counting
@@ -1075,7 +1076,7 @@ object TextOps {
 
   /** Marker file inside a persisted BM25 index recording its bucket
     * layout. */
-  private val Bm25Marker = "_GRAFT_BM25_INDEX"
+  private def bm25Marker(path: String) = s"$path/_GRAFT_BM25_INDEX"
 
   /** Stamp (or verify) a BM25 index directory's bucket count. Writing is
     * idempotent; a directory already stamped with a DIFFERENT bucket
@@ -1084,49 +1085,18 @@ object TextOps {
     * the wrong partitions (the semantic-index K-stamp idiom). */
   private[graft] def ensureBm25Marker(
       spark: org.apache.spark.sql.SparkSession, path: String, numBuckets: Int): Unit = {
-    import org.apache.hadoop.fs.Path
     require(numBuckets >= 1, "need numBuckets >= 1")
-    val marker = new Path(s"$path/$Bm25Marker")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) {
-      val stamped = readBm25NumBuckets(spark, path)
-      require(stamped == numBuckets,
-        s"BM25 index at $path was built with numBuckets=$stamped, got $numBuckets")
-    } else {
-      val out = fs.create(marker, true)
-      try out.write(s"bm25:buckets=$numBuckets:v2".getBytes("UTF-8")) finally out.close()
-    }
-    ()
+    Marker.verifyOrStamp(spark, bm25Marker(path), s"bm25:buckets=$numBuckets:v2")(got =>
+      new IllegalArgumentException(
+        s"BM25 index at $path was built with '$got', got numBuckets=$numBuckets"))
   }
 
-  /** [[readBm25NumBuckets]] as an Option — None when no index marker
-    * exists yet (a maintainer seeding a fresh index).
-    */
+  /** The bucket count a BM25 index directory was stamped with — None
+    * when no index marker exists yet (a maintainer seeding a fresh
+    * index). */
   private[graft] def bm25StampedBuckets(
-      spark: org.apache.spark.sql.SparkSession, path: String): Option[Int] = {
-    import org.apache.hadoop.fs.Path
-    val marker = new Path(s"$path/$Bm25Marker")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) Some(readBm25NumBuckets(spark, path)) else None
-  }
-
-  /** Read the bucket count a BM25 index directory was stamped with. */
-  private[graft] def readBm25NumBuckets(
-      spark: org.apache.spark.sql.SparkSession, path: String): Int = {
-    import org.apache.hadoop.fs.Path
-    val marker = new Path(s"$path/$Bm25Marker")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(marker),
-      s"no BM25 index marker at $path — build it with materializeBm25Index " +
-        "or CdcStream.bm25IndexMaintain")
-    val in = fs.open(marker)
-    val got =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    require(got.startsWith("bm25:buckets=") && got.endsWith(":v2"),
-      s"unrecognized BM25 index marker '$got' at $path")
-    got.stripPrefix("bm25:buckets=").stripSuffix(":v2").toInt
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): Option[Int] =
+    Marker.read(spark, bm25Marker(path)).flatMap(Marker.buckets)
 
   /** Persist the BM25 inverted index as the STORED artifact a serving
     * deployment reads: `path/postings` and `path/dict` partitioned by
@@ -1252,17 +1222,11 @@ object TextOps {
     * sidecar would silently hide them from the block filter;
     * [[graft.streaming.CdcStream.compactBm25Index]] is what (re)arms
     * early termination over a streamed corpus, as part of its fold. */
-  private val Bm25BlockMaxMarker = "_GRAFT_BM25_BLOCKMAX"
+  private def bm25BlockMaxMarker(path: String) = s"$path/_GRAFT_BM25_BLOCKMAX"
 
   private[graft] def writeBm25BlockMaxMarker(
-      spark: org.apache.spark.sql.SparkSession, path: String, blockSize: Int): Unit = {
-    import org.apache.hadoop.fs.Path
-    val marker = new Path(s"$path/$Bm25BlockMaxMarker")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(marker, true)
-    try out.write(s"bm25bm:block=$blockSize:v1".getBytes("UTF-8")) finally out.close()
-    ()
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String, blockSize: Int): Unit =
+    Marker.write(spark, bm25BlockMaxMarker(path), s"bm25bm:block=$blockSize:v1")
 
   /** Disarm the block-max sidecar: marker FIRST (no window where an
     * armed marker advertises a deleted or stale sidecar), then the
@@ -1270,21 +1234,13 @@ object TextOps {
     * never needs the sidecar. */
   private[graft] def clearBm25BlockMax(
       spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val marker = new Path(s"$path/$Bm25BlockMaxMarker")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) { fs.delete(marker, false); () }
-    val sidecar = new Path(s"$path/blockmax")
-    if (fs.exists(sidecar)) { fs.delete(sidecar, true); () }
-    ()
+    Marker.delete(spark, bm25BlockMaxMarker(path))
+    Marker.delete(spark, s"$path/blockmax")
   }
 
   private[graft] def hasBm25BlockMax(
-      spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val marker = new Path(s"$path/$Bm25BlockMaxMarker")
-    marker.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(marker)
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
+    Marker.exists(spark, bm25BlockMaxMarker(path))
 
   /** The blockSize an armed index's sidecar was built with (from the
     * marker [[writeBm25BlockMaxMarker]] stamps) — the probe's first-
@@ -1292,20 +1248,10 @@ object TextOps {
     * holds; falls back to 1 (first admission = ceil(k) postings ≈ the
     * minimum any top-k can certify on) on an unparseable stamp. */
   private[graft] def bm25BlockMaxSize(
-      spark: org.apache.spark.sql.SparkSession, path: String): Int = {
-    import org.apache.hadoop.fs.Path
-    val marker = new Path(s"$path/$Bm25BlockMaxMarker")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) 1
-    else {
-      val in = fs.open(marker)
-      val got =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      "bm25bm:block=([0-9]+):v1".r.findFirstMatchIn(got)
-        .map(_.group(1).toInt).filter(_ >= 1).getOrElse(1)
-    }
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): Int =
+    Marker.read(spark, bm25BlockMaxMarker(path))
+      .flatMap("bm25bm:block=([0-9]+):v1".r.findFirstMatchIn(_))
+      .map(_.group(1).toInt).filter(_ >= 1).getOrElse(1)
 
   /** The mergeable (n, sum_dl) corpus-stats partial of a document set —
     * dl summed as a LONG, so partials merge exactly and avgdl =
@@ -1361,7 +1307,9 @@ object TextOps {
       b: Double = 0.75,
       maxQueryTermDfFrac: Option[Double] = None
   ): DataFrame = {
-    val numBuckets = readBm25NumBuckets(spark, path)
+    val numBuckets = bm25StampedBuckets(spark, path).getOrElse(throw new IllegalArgumentException(
+      s"no BM25 index marker at $path — build it with materializeBm25Index " +
+        "or CdcStream.bm25IndexMaintain"))
     // the two PRELIMINARY driver actions — the (n, sum_dl) stats merge
     // (a 1-row-per-batch table) and the query-term collect — share no
     // inputs, so they run as two concurrent jobs (§2.6): the probe pays

@@ -4,6 +4,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.SessionConf.withConf
+import graft.streaming.{BatchedStore, Marker}
+
 /** The unified, time-partitioned, retention-managed change-event log — the
   * engine's owned replacement for the reference's `cdc.event_log`
   * hypertable (reference timescale/init.sql:41-72).
@@ -32,20 +35,21 @@ object CdcLog {
     * column from `ts` (reference init.sql:17-18 — trigger INSERT into the
     * hypertable routes by ts).
     */
-  def append(events: DataFrame, path: String): Unit = {
+  def append(events: DataFrame, path: String): Unit =
     // INT64 micros (not INT96): footer min/max stats on ts stay usable for
     // file skipping by readers — incl. the cdcpoll DSv2 source's offset
-    // pruning — and every modern reader understands TIMESTAMP(MICROS)
-    events.sparkSession.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    events
-      .withColumn(PartitionCol, to_date(col("ts")))
-      .repartition(col(PartitionCol))
-      .sortWithinPartitions("schema_name", "table_name", "ts", "event_id")
-      .write
-      .mode("append")
-      .partitionBy(PartitionCol)
-      .parquet(path)
-  }
+    // pruning — and every modern reader understands TIMESTAMP(MICROS).
+    // Set for this write only: the caller's session keeps its own value.
+    withConf(events.sparkSession, "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
+      events
+        .withColumn(PartitionCol, to_date(col("ts")))
+        .repartition(col(PartitionCol))
+        .sortWithinPartitions("schema_name", "table_name", "ts", "event_id")
+        .write
+        .mode("append")
+        .partitionBy(PartitionCol)
+        .parquet(path)
+    }
 
   /** Read the log back; partition pruning applies to `event_date` filters. */
   def read(spark: SparkSession, path: String): DataFrame =
@@ -66,24 +70,31 @@ object CdcLog {
     * micro-batch appends — a 5 s trigger writes ~17k files/day/partition
     * at one file per batch) into ~`targetFiles` sorted files. Same
     * rewrite Timescale does implicitly at chunk level; here it is an
-    * explicit maintenance job, idempotent per partition. Rewrites ONE
-    * partition directory at a time so a failure never loses more than one
-    * partition's compaction (the data itself is re-read before replace).
+    * explicit maintenance job, idempotent per partition, one partition
+    * directory at a time.
+    *
+    * Crash-safe by the stores' staged replace
+    * ([[graft.streaming.BatchedStore.stagedReplace]]): the sorted rows
+    * are staged in the hidden `.compact-event_date=<d>` dir (invisible
+    * to Spark's listing and to `cdcpoll`), stamped, and only then is the
+    * live partition deleted and the stage renamed into place. A crash
+    * after the delete leaves the rows only in the committed stage, so
+    * the re-run resumes from it even though the partition is gone.
     */
   def compactPartition(spark: SparkSession, path: String, eventDate: String, targetFiles: Int = 1): Unit = {
     val partDir = s"$path/$PartitionCol=$eventDate"
-    val fs = new Path(partDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(partDir))) return
-    val tmp = s"$path/.compact-$PartitionCol=$eventDate"
-    spark.read
-      .parquet(partDir)
-      .repartition(targetFiles)
-      .sortWithinPartitions("schema_name", "table_name", "ts", "event_id")
-      .write
-      .mode("overwrite")
-      .parquet(tmp)
-    fs.delete(new Path(partDir), true)
-    fs.rename(new Path(tmp), new Path(partDir))
+    val staged = s"$path/.compact-$PartitionCol=$eventDate"
+    val meta = s"compact:$PartitionCol=$eventDate:v1"
+    if (!Marker.exists(spark, partDir) && !BatchedStore.stageCommitted(spark, staged, meta)) return
+    BatchedStore.stagedReplace(spark, staged, partDir, meta)(Seq(new Path(partDir))) { out =>
+      spark.read
+        .parquet(partDir)
+        .repartition(targetFiles)
+        .sortWithinPartitions("schema_name", "table_name", "ts", "event_id")
+        .write
+        .mode("overwrite")
+        .parquet(out)
+    }
   }
 
   /** List partition values present in the log (directory names). */

@@ -207,17 +207,21 @@ final class CdcPollMicroBatchStream(
       case None => CdcPollOffset.Zero
     }
 
-  /** Every committed parquet file under the log root. Hidden names —
-    * a leading `_` or `.` without an `=` (Spark's own file-index rule,
-    * which keeps `event_date=` partitions) — are skipped: an append in
-    * progress stages its half-written files under `_temporary/`, and
-    * opening one fails the query ("is not a Parquet file"). */
+  /** Every committed parquet file under the log root. Hidden names are
+    * skipped by Spark's own file-index rule: a leading `_` without an
+    * `=` (which keeps `_`-prefixed partition dirs), any leading `.`, and
+    * a `._COPYING_` suffix. An append in progress stages its
+    * half-written files under `_temporary/` (opening one fails the
+    * query: "is not a Parquet file"), and `CdcLog.compactPartition`
+    * stages a partition's rewrite under `.compact-event_date=<d>/`
+    * (listing it would deliver those rows twice). */
   private def listParquetFiles(): Seq[FileStatus] = {
     val root = new Path(path)
     val fs = root.getFileSystem(hadoopConf)
     if (!fs.exists(root)) return Seq.empty
     def hidden(name: String) =
-      (name.startsWith("_") || name.startsWith(".")) && !name.contains("=")
+      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+        name.endsWith("._COPYING_")
     val out = Seq.newBuilder[FileStatus]
     val stack = scala.collection.mutable.Stack(root)
     while (stack.nonEmpty) {

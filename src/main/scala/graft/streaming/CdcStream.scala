@@ -7,6 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
 import graft.Overlap
 import graft.SessionConf.withConf
+import BatchedStore.{Counts, Gram, Ham, Win}
 import graft.sink.JsonEnvelope
 import graft.views.EventViews
 
@@ -34,17 +35,6 @@ import graft.views.EventViews
 object CdcStream {
 
   val DefaultTrigger: Trigger = Trigger.ProcessingTime("5 seconds")
-
-  /** Bucket count at or below which the per-trigger touched-bucket
-    * collect is SKIPPED and the store probe reads every bucket
-    * partition: the collect exists to prune `ingest-batch × bucket`
-    * partition dirs when the deployment rule (buckets ∝ corpus) makes
-    * the store's bucket count vastly exceed a batch's distinct keys —
-    * at ≤ 32 buckets any real batch touches essentially all of them, so
-    * the collect is a pure extra job on the trigger's critical path
-    * buying no pruning. Results are identical either way (the bucket
-    * filter was always an optimization over the key semi-join). */
-  private val PruneCollectMinBuckets = 33
 
   /** Open the log directory as a micro-batch stream. */
   def readLogStream(spark: SparkSession, logPath: String, schema: StructType): DataFrame =
@@ -97,15 +87,6 @@ object CdcStream {
       .outputMode("append")
       .start()
 
-  /** Maintain a materialized current-state table from the change stream:
-    * each micro-batch applies its events to the stored snapshot
-    * (CdcApply.applyLog — latest per key wins) and atomically swaps the
-    * state directory. The CDC-to-materialized-view flow without a
-    * transactional table format: per-batch cost is one key-partitioned
-    * join of batch × state; the tmp-write + rename swap keeps readers
-    * consistent, and checkpointing makes redelivery idempotent (applyLog
-    * is — reapplying the same events yields the same state).
-    */
   /** Crash-safe swap of a parquet-backed state directory: write `next`
     * to a tmp dir, move the live dir aside as a backup, move tmp live,
     * drop the backup. Every rename result is CHECKED (HDFS-style
@@ -140,71 +121,6 @@ object CdcStream {
     * between the two renames degrades to replaying one batch, never to
     * silently restarting from empty).
     */
-  /** Guard against mixing rollup-state key formats across builds: the
-    * upsert key changed from `unix_timestamp` seconds to `unix_micros`
-    * (v2) — replaying onto an old-format table would silently DUPLICATE
-    * every window, because second-keys never match µs-keys in the
-    * replace-by-key anti join. The format is stamped beside the state
-    * dir on first write and verified on every upsert; a table that
-    * predates the stamp must be rebuilt, not mixed.
-    */
-  private def verifyStateKeyFormat(
-      spark: SparkSession, statePath: String, fmt: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val marker = new Path(s"$statePath.keyfmt")
-    val live = new Path(statePath)
-    val bak = new Path(s"$statePath.bak")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      val got =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      if (got != fmt)
-        throw new IllegalStateException(
-          s"rollup state at $statePath is keyed '$got' but this build writes " +
-            s"'$fmt' — rebuild the state table (delete $statePath*) instead of " +
-            "mixing key formats, which would duplicate windows silently")
-    } else if (fs.exists(live) || fs.exists(bak)) {
-      throw new IllegalStateException(
-        s"rollup state at $statePath predates the key-format stamp (expected " +
-          s"'$fmt') — it was written by an earlier build with second-resolution " +
-          s"keys; rebuild it (delete $statePath*) instead of mixing key formats")
-    } else {
-      val out = fs.create(marker, true)
-      try out.write(fmt.getBytes("UTF-8")) finally out.close()
-    }
-  }
-
-  /** Bucket count stamped in a store's `.keyfmt` marker (`buckets=N` or
-    * `b=N`), when the marker exists. The hash-bucketed stores treat the
-    * bucket count as a STORE property, not a caller parameter: the
-    * maintainers adopt the marker's count when the store exists (the
-    * `numBuckets` argument only seeds a NEW store), which is what lets
-    * [[maintainStores]] re-bucket a store at compaction — scaling
-    * buckets with corpus size so touched-bucket bytes stay bounded —
-    * without coordinating a parameter change across every deployment
-    * call site. The other layout parameters (k, w, radius, …) are still
-    * verified exactly: they change the stored VALUES, not just their
-    * arrangement.
-    */
-  private[graft] def markerBucketCount(
-      spark: SparkSession, statePath: String): Option[Int] = {
-    import org.apache.hadoop.fs.Path
-    val marker = new Path(s"$statePath.keyfmt")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) None
-    else {
-      val in = fs.open(marker)
-      val got =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      // lookbehind keeps `blocks=`/`probe=` (the hamming marker, which
-      // has no hash-bucket axis) from ever matching
-      "(?<![a-zA-Z])(?:buckets|b)=(\\d+)".r.findFirstMatchIn(got).map(_.group(1).toInt)
-    }
-  }
-
   private def readState(spark: SparkSession, statePath: String): Option[DataFrame] = {
     import org.apache.hadoop.fs.Path
     val live = new Path(statePath)
@@ -215,6 +131,15 @@ object CdcStream {
     else None
   }
 
+  /** Maintain a materialized current-state table from the change stream:
+    * each micro-batch applies its events to the stored snapshot
+    * (CdcApply.applyLog — latest per key wins) and atomically swaps the
+    * state directory. The CDC-to-materialized-view flow without a
+    * transactional table format: per-batch cost is one key-partitioned
+    * join of batch × state; the tmp-write + rename swap keeps readers
+    * consistent, and checkpointing makes redelivery idempotent (applyLog
+    * is — reapplying the same events yields the same state).
+    */
   def materialize(
       logStream: DataFrame,
       statePath: String,
@@ -223,18 +148,13 @@ object CdcStream {
       payloadSchema: org.apache.spark.sql.types.StructType,
       trigger: Trigger = DefaultTrigger
   ): StreamingQuery =
-    logStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        val current = readState(spark, statePath).getOrElse(
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], payloadSchema))
-        val next = graft.capture.CdcApply.applyLog(current, batch.toDF(), pk, payloadSchema)
-        swapState(spark, statePath, next)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .outputMode("append")
-      .start()
+    toForeachBatch(logStream, checkpoint, trigger) { (batch, _) =>
+      val spark = batch.sparkSession
+      val current = readState(spark, statePath).getOrElse(
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], payloadSchema))
+      val next = graft.capture.CdcApply.applyLog(current, batch, pk, payloadSchema)
+      swapState(spark, statePath, next)
+    }
 
   /** Streaming SCD2 maintenance — [[graft.capture.CdcApply.scd2History]]
     * kept current by micro-batches: the history table (one row per
@@ -262,69 +182,64 @@ object CdcStream {
       payloadSchema: StructType,
       trigger: Trigger = DefaultTrigger
   ): StreamingQuery =
-    logStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        verifyStateKeyFormat(spark, statePath, "scd2:event_id:v1")
-        val cols = payloadSchema.fieldNames.toSeq
-        val parsed = batch.toDF().select(
-          col("event_id").as("__ord"),
-          col("operation"),
-          from_json(coalesce(col("after"), col("before")), payloadSchema).as("__row"))
-        val keyed = pk.foldLeft(parsed) { case (df, k) => df.withColumn(k, col(s"__row.$k")) }
-        val history = readState(spark, statePath)
-        val batchKeys = keyed.select(pk.map(col): _*).distinct()
-        val openAsChain = history.map { h =>
-          h.join(batchKeys, pk, "left_semi")
-            .where(col("is_current") === 1)
-            .select(
-              col("valid_from_id").as("__ord"),
-              lit("OPEN").as("operation"),
-              struct(cols.map(col): _*).as("__row"))
-        }
-        val openKeyed = openAsChain.map(o =>
-          pk.foldLeft(o) { case (df, k) => df.withColumn(k, col(s"__row.$k")) })
-        // redelivery guard: drop batch events the history already holds
-        val hwm = history.map { h =>
-          h.join(batchKeys, pk, "left_semi")
-            .groupBy(pk.map(col): _*)
-            .agg(max(greatest(
-              coalesce(col("valid_to_id"), lit(Long.MinValue)),
-              coalesce(col("valid_from_id"), lit(Long.MinValue)))).as("__hwm"))
-        }
-        val fresh = hwm match {
-          case Some(m) =>
-            keyed.join(m, pk, "left_outer")
-              .where(col("__hwm").isNull || col("__ord") > col("__hwm"))
-              .drop("__hwm")
-          case None => keyed
-        }
-        val chainIn = openKeyed.map(fresh.unionByName(_)).getOrElse(fresh)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(pk.map(col): _*).orderBy(col("__ord").asc_nulls_first)
-        val rebuilt = chainIn
-          .withColumn("valid_to_id", lead(col("__ord"), 1).over(w))
-          .where(col("operation") =!= graft.model.ChangeEvent.Delete)
+    toForeachBatch(logStream, checkpoint, trigger) { (batch, _) =>
+      val spark = batch.sparkSession
+      Marker.verifyKeyFormat(spark, statePath, "scd2:event_id:v1")
+      val cols = payloadSchema.fieldNames.toSeq
+      val parsed = batch.select(
+        col("event_id").as("__ord"),
+        col("operation"),
+        from_json(coalesce(col("after"), col("before")), payloadSchema).as("__row"))
+      val keyed = pk.foldLeft(parsed) { case (df, k) => df.withColumn(k, col(s"__row.$k")) }
+      val history = readState(spark, statePath)
+      val batchKeys = keyed.select(pk.map(col): _*).distinct()
+      val openAsChain = history.map { h =>
+        h.join(batchKeys, pk, "left_semi")
+          .where(col("is_current") === 1)
           .select(
-            cols.map(c => col(s"__row.$c").as(c)) ++ Seq(
-              col("__ord").as("valid_from_id"),
-              col("valid_to_id"),
-              when(col("valid_to_id").isNull, 1).otherwise(0).as("is_current")
-            ): _*)
-        val next = history match {
-          case Some(h) =>
-            val untouched = h.join(batchKeys, pk, "left_anti")
-            val closedTouched = h.join(batchKeys, pk, "left_semi")
-              .where(col("is_current") === 0)
-            untouched.unionByName(closedTouched).unionByName(rebuilt)
-          case None => rebuilt
-        }
-        swapState(spark, statePath, next)
+            col("valid_from_id").as("__ord"),
+            lit("OPEN").as("operation"),
+            struct(cols.map(col): _*).as("__row"))
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .outputMode("append")
-      .start()
+      val openKeyed = openAsChain.map(o =>
+        pk.foldLeft(o) { case (df, k) => df.withColumn(k, col(s"__row.$k")) })
+      // redelivery guard: drop batch events the history already holds
+      val hwm = history.map { h =>
+        h.join(batchKeys, pk, "left_semi")
+          .groupBy(pk.map(col): _*)
+          .agg(max(greatest(
+            coalesce(col("valid_to_id"), lit(Long.MinValue)),
+            coalesce(col("valid_from_id"), lit(Long.MinValue)))).as("__hwm"))
+      }
+      val fresh = hwm match {
+        case Some(m) =>
+          keyed.join(m, pk, "left_outer")
+            .where(col("__hwm").isNull || col("__ord") > col("__hwm"))
+            .drop("__hwm")
+        case None => keyed
+      }
+      val chainIn = openKeyed.map(fresh.unionByName(_)).getOrElse(fresh)
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(pk.map(col): _*).orderBy(col("__ord").asc_nulls_first)
+      val rebuilt = chainIn
+        .withColumn("valid_to_id", lead(col("__ord"), 1).over(w))
+        .where(col("operation") =!= graft.model.ChangeEvent.Delete)
+        .select(
+          cols.map(c => col(s"__row.$c").as(c)) ++ Seq(
+            col("__ord").as("valid_from_id"),
+            col("valid_to_id"),
+            when(col("valid_to_id").isNull, 1).otherwise(0).as("is_current")
+          ): _*)
+      val next = history match {
+        case Some(h) =>
+          val untouched = h.join(batchKeys, pk, "left_anti")
+          val closedTouched = h.join(batchKeys, pk, "left_semi")
+            .where(col("is_current") === 0)
+          untouched.unionByName(closedTouched).unionByName(rebuilt)
+        case None => rebuilt
+      }
+      swapState(spark, statePath, next)
+    }
 
   /** Streaming exact dedup with bounded state: duplicates of a key are
     * dropped for as long as the key can still arrive (the watermark bound)
@@ -398,7 +313,7 @@ object CdcStream {
     agg.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
         val spark = batch.sparkSession
-        verifyStateKeyFormat(spark, statePath, "win_start:unix_micros:v2")
+        Marker.verifyKeyFormat(spark, statePath, "win_start:unix_micros:v2")
         val changed = batch.toDF().cache()
         try {
           val next = readState(spark, statePath) match {
@@ -471,7 +386,7 @@ object CdcStream {
     agg.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
         val spark = batch.sparkSession
-        verifyStateKeyFormat(spark, statePath, "bucket_ts:timestamp_us:v1")
+        Marker.verifyKeyFormat(spark, statePath, "bucket_ts:timestamp_us:v1")
         val changed = batch.toDF().cache()
         try {
           val next = readState(spark, statePath) match {
@@ -526,51 +441,45 @@ object CdcStream {
       trigger: Trigger = DefaultTrigger
   ): StreamingQuery = {
     val upsertKeys = "bucket_ts" +: keys
-    events.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.functions.GraftFunctions.register(spark)
-        verifyStateKeyFormat(spark, statePath, "bucket_ts:timestamp_us:v1")
-        import graft.functions.GraftFunctions.{tdigest_agg, tdigest_merge_agg}
-        val stored = readState(spark, statePath)
-        // null-safe high-water read: an EMPTY state table (a first batch
-        // with zero rows still swaps state in) makes max(applied_batch)
-        // NULL — coalesce to -1 so the stream treats it as "nothing
-        // applied yet" instead of NPE-ing on getLong
-        val alreadyApplied = stored.exists { st =>
-          st.columns.contains("applied_batch") &&
-            st.agg(coalesce(max(col("applied_batch")), lit(-1L)))
-              .head().getLong(0) >= batchId
-        }
-        if (!alreadyApplied) {
-          val b = batch.toDF()
-            .groupBy(graft.operators.TsAnalytics
-              .timeBucket(col(tsCol), widthSeconds).as("bucket_ts") +: keys.map(col): _*)
-            .agg(
-              count(lit(1)).as("n"),
-              tdigest_agg(col(valueCol).cast("double")).as("sk"))
-            .cache()
-          try {
-            val next = stored match {
-              case Some(current0) =>
-                val current = current0.drop("applied_batch")
-                val untouched = current.join(b, upsertKeys, "left_anti")
-                val touched = current.join(b.select(upsertKeys.map(col): _*), upsertKeys, "left_semi")
-                val remerged = touched.unionByName(b)
-                  .groupBy(upsertKeys.map(col): _*)
-                  .agg(sum(col("n")).as("n"), tdigest_merge_agg(col("sk")).as("sk"))
-                untouched.unionByName(remerged)
-              case None => b
-            }
-            swapState(spark, statePath, next.withColumn("applied_batch", lit(batchId)))
-          } finally { b.unpersist(); () }
-        }
-        ()
+    toForeachBatch(events, checkpoint, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      graft.functions.GraftFunctions.register(spark)
+      Marker.verifyKeyFormat(spark, statePath, "bucket_ts:timestamp_us:v1")
+      import graft.functions.GraftFunctions.{tdigest_agg, tdigest_merge_agg}
+      val stored = readState(spark, statePath)
+      // null-safe high-water read: an EMPTY state table (a first batch
+      // with zero rows still swaps state in) makes max(applied_batch)
+      // NULL — coalesce to -1 so the stream treats it as "nothing
+      // applied yet" instead of NPE-ing on getLong
+      val alreadyApplied = stored.exists { st =>
+        st.columns.contains("applied_batch") &&
+          st.agg(coalesce(max(col("applied_batch")), lit(-1L)))
+            .head().getLong(0) >= batchId
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .outputMode("append")
-      .start()
+      if (!alreadyApplied) {
+        val b = batch
+          .groupBy(graft.operators.TsAnalytics
+            .timeBucket(col(tsCol), widthSeconds).as("bucket_ts") +: keys.map(col): _*)
+          .agg(
+            count(lit(1)).as("n"),
+            tdigest_agg(col(valueCol).cast("double")).as("sk"))
+          .cache()
+        try {
+          val next = stored match {
+            case Some(current0) =>
+              val current = current0.drop("applied_batch")
+              val untouched = current.join(b, upsertKeys, "left_anti")
+              val touched = current.join(b.select(upsertKeys.map(col): _*), upsertKeys, "left_semi")
+              val remerged = touched.unionByName(b)
+                .groupBy(upsertKeys.map(col): _*)
+                .agg(sum(col("n")).as("n"), tdigest_merge_agg(col("sk")).as("sk"))
+              untouched.unionByName(remerged)
+            case None => b
+          }
+          swapState(spark, statePath, next.withColumn("applied_batch", lit(batchId)))
+        } finally { b.unpersist(); () }
+      }
+    }
   }
 
   /** Streaming exact-substring dedup + strip — the INGEST composition of
@@ -605,7 +514,7 @@ object CdcStream {
     * admission operators [[graft.ext.Dedup.hammingAdmitBanded]] /
     * semanticAdmit pre-bucket for the same reason). Partition-count
     * growth (one `ingest_batch=` dir per trigger) is the standard
-    * streaming-table compaction concern — [[compactSubstringStore]] is
+    * streaming-table compaction concern — [[BatchedStore.compact]] is
     * the offline fold (set-preserving, crash-resumable, run while the
     * stream is stopped).
     *
@@ -633,16 +542,10 @@ object CdcStream {
       numBuckets: Int = 16,
       trigger: Trigger = DefaultTrigger
   ): StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        substringStripApplyBatch(
-          batch.toDF(), batchId, indexPath, outPath, k, hashKey, numBuckets)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .outputMode("append")
-      .start()
+    toForeachBatch(docStream, checkpoint, trigger) { (batch, batchId) =>
+      substringStripApplyBatch(
+        batch, batchId, indexPath, outPath, k, hashKey, numBuckets)
+    }
 
   /** One micro-batch of [[substringStripMaintain]] — package-visible so
     * the crash-replay spec and the stress probe can drive a single
@@ -698,51 +601,20 @@ object CdcStream {
       numBuckets: Int,
       keepOutput: Boolean,
       broadcastProbe: Option[Boolean] = None): (DataFrame, () => Unit) = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField}
+    import org.apache.spark.sql.types.{LongType, StringType}
     import graft.ext.Dedup
     require(numBuckets >= 1, "need numBuckets >= 1")
     val spark = batch.sparkSession
-    // bucket count is a store property — adopt the marker's when the
-    // store exists (maintainStores may have re-bucketed at compaction);
-    // the numBuckets argument seeds new stores only
-    val buckets = markerBucketCount(spark, indexPath).getOrElse(numBuckets)
-    verifyStateKeyFormat(
-      spark, indexPath, s"substring_gram:k=$k:hash=$hashKey:buckets=$buckets:v2")
-    val gramType = if (hashKey) LongType else StringType
-    val storeSchema = StructType(Seq(
-      StructField("g", gramType),
-      StructField("gb", IntegerType),
-      StructField("ingest_batch", LongType)))
+    val buckets = Gram.open(spark, indexPath, numBuckets)(n =>
+      s"substring_gram:k=$k:hash=$hashKey:buckets=$n:v2")
     val b = batch.cache()
     val batchGrams = Dedup.substringGramIndex(b, "doc_id", "text", k, hashKey)
-      .withColumn("gb", pmod(xxhash64(col("g")), lit(buckets)).cast("int"))
+      .withColumn("gb", Gram.bucket(buckets))
       .cache()
     def cleanup(): Unit = { batchGrams.unpersist(); b.unpersist(); () }
     try {
-      val live = new Path(indexPath)
-      val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // replay filter: a re-run batch must probe the PRE-batch store even
-      // if the crashed attempt already wrote ingest_batch=<batchId>
-      val store =
-        if (fs.exists(live))
-          spark.read.schema(storeSchema).parquet(indexPath)
-            .where(col("ingest_batch") < batchId)
-        else
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], storeSchema)
-      // bucket pruning: only the gb partitions the batch's grams hash
-      // into can hold a probe hit (bounded collect — ≤ numBuckets
-      // values). Skipped at small bucket counts, where every bucket is
-      // touched anyway and the collect is a pure critical-path job —
-      // see [[PruneCollectMinBuckets]].
-      val touched: Option[Seq[Int]] =
-        if (buckets < PruneCollectMinBuckets) None
-        else Some(batchGrams.select("gb").distinct().collect().map(_.getInt(0)).toSeq)
-      val index = touched match {
-        case Some(t) if t.isEmpty => store.select("g").limit(0)
-        case Some(t)              => store.where(col("gb").isin(t: _*)).select("g")
-        case None                 => store.select("g")
-      }
+      val index = Gram.read(spark, indexPath, Gram.schema(if (hashKey) LongType else StringType),
+        batchId, Gram.touched(batchGrams, buckets)).select("g")
       // broadcastProbe: the batch gram SET is already cached and counted
       // into `touched` at large bucket counts; when the caller gave no
       // size hint, gate the probe broadcast on the batch gram count
@@ -777,19 +649,8 @@ object CdcStream {
             broadcast(index.join(broadcast(batchGrams.select("g")), Seq("g"), "left_semi")),
             Seq("g"), "left_anti")
         else batchGrams.join(index, Seq("g"), "left_anti")
-      // one file per bucket dir: without the repartition every write task
-      // fans out across all numBuckets partition dirs (tasks × buckets
-      // small files per trigger — the small-file explosion that kills
-      // streaming tables); clustered by gb, each task owns whole buckets
-      // the two writes run concurrently — [[graft.Overlap.all]]
-      val append: () => Unit = () => try Overlap.all(Seq(
-        () => kept.write.mode("overwrite").parquet(s"$outPath/ingest_batch=$batchId"),
-        () => newGrams
-          .select("g", "gb")
-          .repartition(buckets, col("gb"))
-          .write.mode("overwrite").partitionBy("gb")
-          .parquet(s"$indexPath/ingest_batch=$batchId"))) finally cleanup()
-      (kept, append)
+      (kept, Gram.stagedAppend(kept, outPath, newGrams.select("g", "gb"), indexPath, batchId,
+        Some(buckets))(() => cleanup()))
     } catch { case e: Throwable => cleanup(); throw e }
   }
 
@@ -827,17 +688,11 @@ object CdcStream {
       probeBits: Int = 2,
       trigger: Trigger = DefaultTrigger
   ): StreamingQuery =
-    sketchStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        hammingAdmitApplyBatch(
-          batch.toDF(), batchId, indexPath, outPath, idCol, hashCol,
-          radius, blocks, probeBits)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .outputMode("append")
-      .start()
+    toForeachBatch(sketchStream, checkpoint, trigger) { (batch, batchId) =>
+      hammingAdmitApplyBatch(
+        batch, batchId, indexPath, outPath, idCol, hashCol,
+        radius, blocks, probeBits)
+    }
 
   /** One micro-batch of [[hammingAdmitMaintain]] — package-visible for
     * the crash-replay spec and stress probes. Idempotent in `batchId`.
@@ -862,11 +717,9 @@ object CdcStream {
     kept
   }
 
-  /** [[hammingAdmitApplyBatch]] with the banded append staged — the
-    * [[substringStripApplyBatchStaged]] contract. */
   /** Layout-verified, replay-filtered read of the banded Hamming store —
     * shared by the standalone staged stage and the composed pipeline's
-    * speculative probe leg (one store-read implementation, no drift).
+    * speculative probe leg.
     */
   private[graft] def readHammingStore(
       spark: SparkSession,
@@ -875,27 +728,14 @@ object CdcStream {
       radius: Int,
       blocks: Int,
       probeBits: Int): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructField}
-    verifyStateKeyFormat(spark, indexPath,
+    import org.apache.spark.sql.types.LongType
+    Marker.verifyKeyFormat(spark, indexPath,
       s"hamming_banded:radius=$radius:blocks=$blocks:probe=$probeBits:v1")
-    val storeSchema = StructType(Seq(
-      StructField("key", LongType),
-      StructField("id", LongType),
-      StructField("hh", LongType),
-      StructField("ingest_batch", LongType),
-      StructField("blk", IntegerType)))
-    val live = new Path(indexPath)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(live))
-      spark.read.schema(storeSchema).parquet(indexPath)
-        .where(col("ingest_batch") < batchId)
-        .select("blk", "key", "id", "hh")
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], storeSchema)
-        .select("blk", "key", "id", "hh")
+    Ham.read(spark, indexPath, Ham.schema(LongType), batchId).select("blk", "key", "id", "hh")
   }
 
+  /** [[hammingAdmitApplyBatch]] with the banded append staged — the
+    * [[substringStripApplyBatchStaged]] contract. */
   private[graft] def hammingAdmitApplyBatchStaged(
       batch: DataFrame,
       batchId: Long,
@@ -911,21 +751,14 @@ object CdcStream {
     val spark = batch.sparkSession
     val bandedIndex = readHammingStore(spark, indexPath, batchId, radius, blocks, probeBits)
     val b = batch.cache()
-    def cleanup(): Unit = { b.unpersist(); () }
     try {
       val out = Dedup
         .hammingAdmitBanded(bandedIndex, b, idCol, hashCol, radius, blocks, probeBits)
       // eager under keepOutput — the boilerplateApplyBatchStaged note
       val kept = if (keepOutput) out.localCheckpoint(eager = true) else out
-      // the two writes run concurrently — [[graft.Overlap.all]]
-      val append: () => Unit = () => try Overlap.all(Seq(
-        () => kept.write.mode("overwrite").parquet(s"$outPath/ingest_batch=$batchId"),
-        () => Dedup.hammingIndexBanded(b, idCol, hashCol, blocks)
-          .repartition(col("blk"))
-          .write.mode("overwrite").partitionBy("blk")
-          .parquet(s"$indexPath/ingest_batch=$batchId"))) finally cleanup()
-      (kept, append)
-    } catch { case e: Throwable => cleanup(); throw e }
+      (kept, Ham.stagedAppend(kept, outPath, Dedup.hammingIndexBanded(b, idCol, hashCol, blocks),
+        indexPath, batchId, width = None)(() => { b.unpersist(); () }))
+    } catch { case e: Throwable => b.unpersist(); throw e }
   }
 
   /** Streaming winnowing near-dup admission — the INGEST form of
@@ -970,17 +803,11 @@ object CdcStream {
       portable: Boolean = false,
       trigger: Trigger = DefaultTrigger
   ): StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        winnowAdmitApplyBatch(
-          batch.toDF(), batchId, indexPath, outPath, idCol, textCol,
-          w, windowSize, minShared, maxDf, numBuckets, portable)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .outputMode("append")
-      .start()
+    toForeachBatch(docStream, checkpoint, trigger) { (batch, batchId) =>
+      winnowAdmitApplyBatch(
+        batch, batchId, indexPath, outPath, idCol, textCol,
+        w, windowSize, minShared, maxDf, numBuckets, portable)
+    }
 
   /** Stamp a [[winnowAdmitMaintain]] store's layout marker without
     * running a batch — the bulk-backfill entry point: a deployment
@@ -990,6 +817,7 @@ object CdcStream {
     * instead of refusing. Also used by the stress harness's
     * fragmented-store probes; the format string is the maintainer's
     * own, so drift throws at the next trigger, never probes silently.
+    * Returns the store's bucket count.
     */
   private[graft] def stampWinnowLayout(
       spark: SparkSession,
@@ -998,12 +826,9 @@ object CdcStream {
       windowSize: Int,
       maxDf: Long,
       numBuckets: Int,
-      portable: Boolean): Unit = {
-    val h = if (portable) "md5" else "xx"
-    val buckets = markerBucketCount(spark, indexPath).getOrElse(numBuckets)
-    verifyStateKeyFormat(spark, indexPath,
-      s"winnow_admit:w=$w:ws=$windowSize:maxdf=$maxDf:b=$buckets:h=$h:v1")
-  }
+      portable: Boolean): Int =
+    Win.open(spark, indexPath, numBuckets)(n =>
+      s"winnow_admit:w=$w:ws=$windowSize:maxdf=$maxDf:b=$n:h=${if (portable) "md5" else "xx"}:v1")
 
   /** One micro-batch of [[winnowAdmitMaintain]] — package-visible for
     * the crash-replay spec and stress probes. Idempotent in `batchId`.
@@ -1058,27 +883,15 @@ object CdcStream {
       portable: Boolean,
       keepOutput: Boolean,
       broadcastProbe: Option[Boolean] = None): (DataFrame, () => Unit) = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField}
+    import org.apache.spark.sql.types.{LongType, StringType}
     import graft.ext.Dedup
     require(minShared >= 1, "need minShared >= 1")
     require(maxDf >= 2, "need maxDf >= 2 — pairs need fingerprints in at least 2 docs")
     require(numBuckets >= 1, "need numBuckets >= 1")
     val spark = batch.sparkSession
-    val h = if (portable) "md5" else "xx"
-    // bucket count is a store property — adopt the marker's (see
-    // markerBucketCount); the numBuckets argument seeds new stores only
-    val buckets = markerBucketCount(spark, indexPath).getOrElse(numBuckets)
-    verifyStateKeyFormat(spark, indexPath,
-      s"winnow_admit:w=$w:ws=$windowSize:maxdf=$maxDf:b=$buckets:h=$h:v1")
-    val fpType: DataType = if (portable) StringType else LongType
-    val storeSchema = StructType(Seq(
-      StructField("id", LongType),
-      StructField("fp", fpType),
-      StructField("ingest_batch", LongType),
-      StructField("fb", IntegerType)))
+    val buckets = stampWinnowLayout(spark, indexPath, w, windowSize, maxDf, numBuckets, portable)
     val posts = Dedup.winnowingPostings(batch, idCol, textCol, w, windowSize, portable)
-      .withColumn("fb", pmod(xxhash64(col("fp")), lit(buckets)).cast("int"))
+      .withColumn("fb", Win.bucket(buckets))
       .cache()
     // micro-batch hint: wrap a batch-derived join side in an explicit
     // broadcast (see the broadcastProbe scaladoc); identity otherwise
@@ -1089,83 +902,24 @@ object CdcStream {
       priorCached.foreach(_.unpersist()); posts.unpersist(); ()
     }
     try {
-      // bucket pruning: only the fb partitions the batch's fingerprints
-      // hash into can hold a probe hit (bounded collect — ≤ numBuckets;
-      // skipped at small bucket counts, [[PruneCollectMinBuckets]])
-      val touched: Option[Seq[Int]] =
-        if (buckets < PruneCollectMinBuckets) None
-        else Some(posts.select("fb").distinct().collect().map(_.getInt(0)).toSeq)
-      val live = new Path(indexPath)
-      val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
       // CACHED: prior has two consumers (the hot-set aggregate and the
-      // pairing join below), and without the cache each planned its OWN
-      // full semi-scan of the touched store — the store's bytes were
-      // read twice per trigger. One cached map-only scan feeds both;
-      // rows are bounded by the store postings matching the batch's
-      // fingerprints, and the cache drops with the stage's cleanup.
-      val prior = {
-        val p =
-          if (fs.exists(live) && !touched.exists(_.isEmpty))
-            spark.read.schema(storeSchema).parquet(indexPath)
-              // replay filter: a re-run batch must probe the PRE-batch
-              // store even though the crashed attempt already appended
-              .where(col("ingest_batch") < batchId &&
-                touched.map(t => col("fb").isin(t: _*)).getOrElse(lit(true)))
-              .join(bHint(posts.select("fp").distinct()), Seq("fp"), "left_semi")
-              .select(col("fp"), col("id").as("a_id"))
-          else
-            spark.createDataFrame(spark.sparkContext.emptyRDD[Row], storeSchema)
-              .select(col("fp"), col("id").as("a_id"))
-        val cached = p.persist()
-        priorCached = Some(cached)
-        cached
-      }
-      // cumulative-prior df cap, computed on the rows already in hand
-      val hot = prior.groupBy("fp").agg(count(lit(1)).as("n"))
-        .where(col("n") > maxDf).select("fp")
-      // the pairing side (prior minus hot fingerprints) is bounded by
-      // maxDf rows per batch fingerprint — micro-batch-broadcastable by
-      // construction, while its STATIC estimate derives from the store's
-      // file size (corpus-inflated); the hint keeps the pairing join
-      // map-only over the cached posts
-      val snapHit = posts
-        .join(bHint(prior.join(bHint(hot), Seq("fp"), "left_anti")), Seq("fp"))
-        .groupBy("id", "a_id").agg(count(lit(1)).as("shared"))
-        .where(col("shared") >= minShared)
-        .select("id").distinct()
-        .withColumn("__snap", lit(true))
-      val band = posts.groupBy("fp").agg(count(lit(1)).as("df"))
-        .where(col("df") >= 2 && col("df") <= maxDf).select("fp")
-      val pb = posts.join(bHint(band), Seq("fp"), "left_semi")
-      val batchHit = pb.select(col("id").as("id_a"), col("fp"))
-        .join(bHint(pb.select(col("id").as("id_b"), col("fp"))), Seq("fp"))
-        .where(col("id_a") < col("id_b"))
-        .groupBy("id_a", "id_b").agg(count(lit(1)).as("shared"))
-        .where(col("shared") >= minShared)
-        .select(col("id_b").as("id")).distinct()
-        .withColumn("__batch", lit(true))
-      val out = batch
-        .select(col(idCol).cast("long").as("id"))
-        .join(bHint(snapHit), Seq("id"), "left_outer")
-        .join(bHint(batchHit), Seq("id"), "left_outer")
-        .select(
-          col("id"),
-          when(col("__snap"), lit("dup_snapshot"))
-            .when(col("__batch"), lit("dup_batch"))
-            .otherwise(lit("new"))
-            .as("status"))
+      // pairing join), and without the cache each planned its OWN full
+      // semi-scan of the touched store — the store's bytes were read
+      // twice per trigger. One cached map-only scan feeds both; rows are
+      // bounded by the store postings matching the batch's fingerprints,
+      // and the cache drops with the stage's cleanup.
+      val prior = Win
+        .read(spark, indexPath, Win.schema(if (portable) StringType else LongType), batchId,
+          Win.touched(posts, buckets))
+        .join(bHint(posts.select("fp").distinct()), Seq("fp"), "left_semi")
+        .select(col("fp"), col("id").as("a_id"))
+        .persist()
+      priorCached = Some(prior)
+      val out = Dedup.winnowStatuses(batch, idCol, posts, prior, minShared, maxDf, hint = bHint)
       // eager under keepOutput — the boilerplateApplyBatchStaged note
       val kept = if (keepOutput) out.localCheckpoint(eager = true) else out
-      // one file per bucket dir: clustered by fb so a write task owns
-      // whole buckets instead of fanning small files across partitions.
-      // The two writes run concurrently — [[graft.Overlap.all]]
-      val append: () => Unit = () => try Overlap.all(Seq(
-        () => kept.write.mode("overwrite").parquet(s"$outPath/ingest_batch=$batchId"),
-        () => posts.select("id", "fp", "fb")
-          .repartition(buckets, col("fb"))
-          .write.mode("overwrite").partitionBy("fb")
-          .parquet(s"$indexPath/ingest_batch=$batchId"))) finally cleanup()
-      (kept, append)
+      (kept, Win.stagedAppend(kept, outPath, posts.select("id", "fp", "fb"), indexPath, batchId,
+        Some(buckets))(() => cleanup()))
     } catch { case e: Throwable => cleanup(); throw e }
   }
 
@@ -1209,15 +963,10 @@ object CdcStream {
       numBuckets: Int = 64,
       trigger: Trigger = DefaultTrigger
   ): StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        bm25IndexApplyBatch(
-          batch.toDF(), batchId, indexPath, idCol, textCol, numBuckets)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .outputMode("append")
-      .start()
+    toForeachBatch(docStream, checkpoint, trigger) { (batch, batchId) =>
+      bm25IndexApplyBatch(
+        batch, batchId, indexPath, idCol, textCol, numBuckets)
+    }
 
   /** One micro-batch of [[bm25IndexMaintain]] — package-visible for the
     * crash-replay spec and stress probes. Idempotent in `batchId`. */
@@ -1231,8 +980,8 @@ object CdcStream {
     import org.apache.hadoop.fs.Path
     import graft.ext.TextOps
     val spark = batch.sparkSession
-    // bucket count is a store property — adopt the stamped count (see
-    // markerBucketCount's note); numBuckets seeds new indexes only
+    // bucket count is a store property — adopt the stamped count (the
+    // [[BatchedStore]] note); numBuckets seeds new indexes only
     val buckets = TextOps.bm25StampedBuckets(spark, indexPath).getOrElse(numBuckets)
     TextOps.ensureBm25Marker(spark, indexPath, buckets)
     // layout guard: a one-shot materializeBm25Index table (top-level tb=
@@ -1264,14 +1013,10 @@ object CdcStream {
         // cached tf/batch frames: run them concurrently so the trigger
         // pays the slowest write, not the sum ([[graft.Overlap.all]])
         Overlap.all(Seq(
-          // one file per bucket dir (the substringStripMaintain rule)
-          () => tf.repartition(buckets, col("tb"))
-            .write.mode("overwrite").partitionBy("tb")
-            .parquet(s"$indexPath/postings/ingest_batch=$batchId"),
-          () => tf.groupBy("term", "tb").agg(count(lit(1)).as("df"))
-            .repartition(buckets, col("tb"))
-            .write.mode("overwrite").partitionBy("tb")
-            .parquet(s"$indexPath/dict/ingest_batch=$batchId"),
+          () => BatchedStore.writeBatch(
+            tf, s"$indexPath/postings", batchId, "tb", Some(buckets)),
+          () => BatchedStore.writeBatch(tf.groupBy("term", "tb").agg(count(lit(1)).as("df")),
+            s"$indexPath/dict", batchId, "tb", Some(buckets)),
           () => TextOps.bm25StatsPartial(b, textCol)
             .write.mode("overwrite")
             .parquet(s"$indexPath/stats/ingest_batch=$batchId")))
@@ -1330,17 +1075,11 @@ object CdcStream {
       numBuckets: Int = 16,
       trigger: Trigger = DefaultTrigger
   ): StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        boilerplateApplyBatch(
-          batch.toDF(), batchId, countsPath, outPath, idCol, textCol,
-          minDocs, sep, numBuckets)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .outputMode("append")
-      .start()
+    toForeachBatch(docStream, checkpoint, trigger) { (batch, batchId) =>
+      boilerplateApplyBatch(
+        batch, batchId, countsPath, outPath, idCol, textCol,
+        minDocs, sep, numBuckets)
+    }
 
   /** One micro-batch of [[boilerplateMaintain]] — package-visible for
     * the crash-replay spec and stress probes. Idempotent in `batchId`.
@@ -1377,49 +1116,25 @@ object CdcStream {
       sep: String,
       numBuckets: Int,
       keepOutput: Boolean): (DataFrame, () => Unit) = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField}
+    import org.apache.spark.sql.types.StringType
     import graft.ext.TextOps
     require(minDocs >= 2, "need minDocs >= 2 — minDocs=1 would strip everything")
     require(numBuckets >= 1, "need numBuckets >= 1")
     val spark = batch.sparkSession
-    // bucket count is a store property — adopt the marker's (see
-    // markerBucketCount); the numBuckets argument seeds new stores only
-    val buckets = markerBucketCount(spark, countsPath).getOrElse(numBuckets)
-    verifyStateKeyFormat(spark, countsPath,
-      s"boilerplate:minDocs=$minDocs:sep=${sep.##}:buckets=$buckets:v1")
-    val storeSchema = StructType(Seq(
-      StructField("ph", StringType),
-      StructField("n_docs", LongType),
-      StructField("ingest_batch", LongType),
-      StructField("pb", IntegerType)))
+    val buckets = Counts.open(spark, countsPath, numBuckets)(n =>
+      s"boilerplate:minDocs=$minDocs:sep=${sep.##}:buckets=$n:v1")
     val paras = TextOps.paragraphs(batch, idCol, textCol, sep)
-      .withColumn("pb", pmod(xxhash64(col("ph")), lit(buckets)).cast("int"))
+      .withColumn("pb", Counts.bucket(buckets))
       .cache()
     def cleanup(): Unit = { paras.unpersist(); () }
     try {
       val own = paras.groupBy("ph", "pb").agg(countDistinct(col("doc_id")).as("n_docs"))
-      // bucket pruning: only the pb partitions the batch's paragraphs
-      // hash into can hold a prior count (bounded collect — ≤ numBuckets;
-      // skipped at small bucket counts, [[PruneCollectMinBuckets]])
-      val touched: Option[Seq[Int]] =
-        if (buckets < PruneCollectMinBuckets) None
-        else Some(paras.select("pb").distinct().collect().map(_.getInt(0)).toSeq)
-      val live = new Path(countsPath)
-      val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val prior =
-        if (fs.exists(live) && !touched.exists(_.isEmpty))
-          spark.read.schema(storeSchema).parquet(countsPath)
-            // replay filter: a re-run batch must see the PRE-batch counts
-            // even if the crashed attempt already wrote its own partial
-            .where(col("ingest_batch") < batchId &&
-              touched.map(t => col("pb").isin(t: _*)).getOrElse(lit(true)))
-            .join(paras.select("ph").distinct(), Seq("ph"), "left_semi")
-            .groupBy("ph").agg(sum(col("n_docs")).as("n_prior"))
-        else
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[Row],
-            StructType(Seq(StructField("ph", StringType), StructField("n_prior", LongType))))
+      // replay filter: a re-run batch must see the PRE-batch counts even
+      // if the crashed attempt already wrote its own partial
+      val prior = Counts
+        .read(spark, countsPath, Counts.schema(StringType), batchId, Counts.touched(paras, buckets))
+        .join(paras.select("ph").distinct(), Seq("ph"), "left_semi")
+        .groupBy("ph").agg(sum(col("n_docs")).as("n_prior"))
       val boiler = own
         .join(prior, Seq("ph"), "left_outer")
         .where(coalesce(col("n_prior"), lit(0L)) + col("n_docs") >= minDocs)
@@ -1430,14 +1145,8 @@ object CdcStream {
       // partition + store append) leave the critical path as deferred
       // I/O over the materialized blocks
       val kept = if (keepOutput) out.localCheckpoint(eager = true) else out
-      // the two writes run concurrently — [[graft.Overlap.all]]
-      val append: () => Unit = () => try Overlap.all(Seq(
-        () => kept.write.mode("overwrite").parquet(s"$outPath/ingest_batch=$batchId"),
-        () => own
-          .repartition(buckets, col("pb"))
-          .write.mode("overwrite").partitionBy("pb")
-          .parquet(s"$countsPath/ingest_batch=$batchId"))) finally cleanup()
-      (kept, append)
+      (kept, Counts.stagedAppend(kept, outPath, own, countsPath, batchId, Some(buckets))(
+        () => cleanup()))
     } catch { case e: Throwable => cleanup(); throw e }
   }
 
@@ -1504,18 +1213,13 @@ object CdcStream {
       shuffleWidth: Int = 8,
       trigger: Trigger = DefaultTrigger
   ): StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        ingestPipelineApplyBatch(
-          batch.toDF(), batchId, storeRoot, semanticIndexPath,
-          idCol, textCol, sketchCol, embCol,
-          k, minDocsBoiler, w, windowSize, minShared, maxDf,
-          radius, threshold, numBuckets, hashKey, portable, shuffleWidth)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .outputMode("append")
-      .start()
+    toForeachBatch(docStream, checkpoint, trigger) { (batch, batchId) =>
+      ingestPipelineApplyBatch(
+        batch, batchId, storeRoot, semanticIndexPath,
+        idCol, textCol, sketchCol, embCol,
+        k, minDocsBoiler, w, windowSize, minShared, maxDf,
+        radius, threshold, numBuckets, hashKey, portable, shuffleWidth)
+    }
 
   /** Micro-batch row threshold above which [[ingestPipelineApplyBatch]]
     * keeps the SESSION's shuffle width instead of the `shuffleWidth`
@@ -1773,13 +1477,11 @@ object CdcStream {
       s.fork {
         // index advance: the SURVIVORS' banded rows (the staged stage's
         // append contract — non-survivors never reach the store)
-        graft.ext.Dedup
-          .hammingIndexBanded(
+        BatchedStore.writeBatch(
+          graft.ext.Dedup.hammingIndexBanded(
             b.join(surv3, Seq("doc_id"), "left_semi").select(col("doc_id"), col("__hh")),
-            "doc_id", "__hh", blocks = 4)
-          .repartition(col("blk"))
-          .write.mode("overwrite").partitionBy("blk")
-          .parquet(s"$storeRoot/ham/ingest_batch=$batchId")
+            "doc_id", "__hh", blocks = 4),
+          s"$storeRoot/ham", batchId, Ham.bucketCol, width = None)
       }
       val hstat = hstatRaw
         .select(col("id").as("doc_id"), col("status").as("perceptual_status"))
@@ -1840,215 +1542,6 @@ object CdcStream {
     ()
   }
 
-  /** Offline compaction for the [[substringStripMaintain]] gram store:
-    * fold every `ingest_batch ≤ upToBatch` partition into ONE partition
-    * labeled `ingest_batch=<upToBatch>`. The store is semantically a SET
-    * of grams, and any probing batch id is > upToBatch (only batches
-    * already committed to the checkpoint may be compacted), so relabeling
-    * old grams to `upToBatch` changes no probe's view — it just bounds
-    * the directory count the per-trigger appends grow (the standard
-    * streaming-table compaction chore).
-    *
-    * MUST run while the stream is stopped, with `upToBatch` STRICTLY
-    * below the next batch id the checkpoint will assign (a replayed last
-    * batch filters `ingest_batch < batchId`, so compacting anything it
-    * could replay-exclude would leak its own grams back into its probe).
-    *
-    * Crash-safe by staging + resume: the compacted set is first written
-    * OUTSIDE the store (`<indexPath>.compact`); only once that write has
-    * committed (_SUCCESS) are source partitions deleted and the staged
-    * dir renamed in. A re-run after a crash detects the committed staged
-    * dir and resumes the delete+rename phase instead of re-deriving the
-    * set from a store the crash may have left partially deleted.
-    */
-  def compactSubstringStore(
-      spark: SparkSession,
-      indexPath: String,
-      upToBatch: Long,
-      newBuckets: Option[Int] = None
-  ): Unit = {
-    val rb = newBuckets.filter(_ >= 1)
-    compactBatchedTable(spark, indexPath, upToBatch, Seq("gb"),
-      df => {
-        // optional re-bucket (buckets ∝ corpus — see maintainStores) +
-        // sort-within-bucket on the probe key so parquet row-group
-        // min/max stats can skip inside a bucket
-        val re = rb.map(n => df.select(col("g"),
-            pmod(xxhash64(col("g")), lit(n)).cast("int").as("gb")))
-          .getOrElse(df.select("g", "gb"))
-        re.repartition(col("gb")).sortWithinPartitions("g")
-      },
-      metaTag = rb.map(n => s":rb=$n").getOrElse(""),
-      afterCommit = () => rb.foreach(n => restampMarkerBuckets(spark, indexPath, n)))
-  }
-
-  /** The staged, crash-resumable fold shared by every streaming store's
-    * compactor: read all `ingest_batch ≤ upToBatch` rows, apply the
-    * store's own `fold` (identity concatenation for per-document fact
-    * tables, partial-sum merges for mergeable-partial tables), and
-    * replace the source partitions with ONE `ingest_batch=<upToBatch>`
-    * partition. Because every probe either treats the store as a set /
-    * bag of rows filtered at `ingest_batch < batchId` or SUMS partials
-    * regardless of which batch wrote them, relabeling folded rows to
-    * `upToBatch` changes no probe's view — it just bounds the
-    * directory count the per-trigger appends grow (at the reference's
-    * 5 s cadence a store gains ~17k partitions/day; file listing
-    * dominates every probe long before data size does).
-    *
-    * MUST run while the stream is stopped, with `upToBatch` STRICTLY
-    * below the next batch id the checkpoint will assign (a replayed
-    * last batch filters `ingest_batch < batchId`, so compacting
-    * anything it could replay-exclude would leak that batch's own rows
-    * back into its probe).
-    *
-    * Crash-safe by staging + resume: the folded rows are first written
-    * OUTSIDE the store (`<tablePath>.compact`); only once that write
-    * has committed (_SUCCESS) and its `_GRAFT_COMPACT_META` recorded
-    * WHICH `upToBatch` it folds are source partitions deleted and the
-    * staged dir renamed in. A re-run after a crash detects the
-    * committed staged dir and resumes the delete+rename phase instead
-    * of re-deriving the fold from a store the crash may have left
-    * partially deleted — but ONLY when the staged META matches the
-    * requested `upToBatch`: a crashed compaction to X resumed as a
-    * compaction to Y > X would otherwise skip the fold, delete
-    * partitions (X, Y] and rename the stale X-fold in as
-    * `ingest_batch=Y`, silently losing those batches' rows. A mismatch
-    * is a hard error telling the caller to finish the crashed
-    * compaction (re-run with its own `upToBatch`) first; re-deriving
-    * under the new target would read a store the crashed delete phase
-    * may have already damaged. The staged _SUCCESS and META markers
-    * ride along into the store — Spark's file listing ignores
-    * underscore-prefixed metadata files, and deleting them early would
-    * break resume.
-    */
-  private def compactBatchedTable(
-      spark: SparkSession,
-      tablePath: String,
-      upToBatch: Long,
-      partitionCols: Seq[String],
-      fold: DataFrame => DataFrame,
-      batchCol: String = "ingest_batch",
-      metaTag: String = "",
-      afterCommit: () => Unit = () => ()
-  ): Unit = {
-    import org.apache.hadoop.fs.Path
-    val live = new Path(tablePath)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(live), s"no batched store at $tablePath")
-    val staged = new Path(s"$tablePath.compact")
-    val meta = new Path(staged, "_GRAFT_COMPACT_META")
-    // metaTag rides in the staged META so a crash-resumed RE-BUCKETING
-    // compaction refuses to resume under a different target bucket
-    // count, exactly like a different upToBatch
-    val metaBody = s"compact:upTo=$upToBatch$metaTag:v1"
-    // a committed stage is _SUCCESS (parquet fold intact) + META (we
-    // know which upToBatch it was staged for); _SUCCESS without META is
-    // a crash BETWEEN the fold and the stamp — no deletes have run yet
-    // (they only start below, after the stamp), so re-deriving is safe
-    val stagedCommitted =
-      if (fs.exists(new Path(staged, "_SUCCESS")) && fs.exists(meta)) {
-        val in = fs.open(meta)
-        val got =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
-        require(got == metaBody,
-          s"staged compaction at $staged was taken for '$got', not " +
-            s"'$metaBody' — a crashed compaction may already have deleted " +
-            "source partitions for its own target; re-run with the staged " +
-            "upToBatch to finish it before compacting further")
-        true
-      } else false
-    if (!stagedCommitted) {
-      val folded = fold(
-        spark.read.parquet(tablePath).where(col(batchCol) <= upToBatch))
-      val w = folded.write.mode("overwrite")
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(staged.toString)
-      val out = fs.create(meta, true)
-      try out.write(metaBody.getBytes("UTF-8")) finally out.close()
-    }
-    fs.listStatus(live)
-      .map(_.getPath)
-      .filter(_.getName.startsWith(s"$batchCol="))
-      .filter(_.getName.stripPrefix(s"$batchCol=").toLong <= upToBatch)
-      .foreach(p => fs.delete(p, true))
-    val target = new Path(s"$tablePath/$batchCol=$upToBatch")
-    if (!fs.rename(staged, target))
-      throw new java.io.IOException(
-        s"store compaction: could not move $staged into place at $target " +
-          "(staged fold is intact — re-run to resume)")
-    // post-commit hook (marker re-stamp after a re-bucketing fold). The
-    // [rename done, marker not yet re-stamped] crash window is covered
-    // by the standing contract: finish a crashed compaction (re-run it)
-    // BEFORE restarting the stream — the re-run re-derives the fold
-    // from the already-folded store (idempotent) and re-stamps.
-    afterCommit()
-  }
-
-  /** Re-stamp the bucket count in a store's `.keyfmt` marker after a
-    * re-bucketing compaction fold commits (the probes and maintainers
-    * adopt the marker's count — [[markerBucketCount]]).
-    */
-  private def restampMarkerBuckets(
-      spark: SparkSession, statePath: String, newBuckets: Int): Unit = {
-    import org.apache.hadoop.fs.Path
-    val marker = new Path(s"$statePath.keyfmt")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(marker), s"no .keyfmt marker at $statePath to re-stamp")
-    val in = fs.open(marker)
-    val got =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    val updated = "(?<![a-zA-Z])((?:buckets|b)=)\\d+".r
-      .replaceFirstIn(got, "$1" + newBuckets)
-    require(updated != got || got.contains(s"=$newBuckets"),
-      s"marker '$got' at $statePath carries no bucket field to re-stamp")
-    val out = fs.create(marker, true)
-    try out.write(updated.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Offline compaction for the [[hammingAdmitMaintain]] banded store:
-    * banded rows are per-id facts (each id lives in exactly one batch),
-    * so the fold is pure concatenation clustered back onto the `blk`
-    * axis — set-preserving by construction. Same run-while-stopped /
-    * `upToBatch`-below-next-batch contract as [[compactBatchedTable]].
-    */
-  def compactHammingStore(
-      spark: SparkSession,
-      indexPath: String,
-      upToBatch: Long
-  ): Unit =
-    // no bucket axis to scale (blk is the structural band index) —
-    // the fold sorts each band by key so row-group stats order the
-    // stream side of the broadcast probe join
-    compactBatchedTable(spark, indexPath, upToBatch, Seq("blk"),
-      _.select("key", "id", "hh", "blk").repartition(col("blk"))
-        .sortWithinPartitions("key"))
-
-  /** Offline compaction for the [[winnowAdmitMaintain]] fingerprint
-    * store: postings are per-id facts, so the fold is concatenation
-    * clustered onto the `fb` bucket axis. The cumulative-prior df cap
-    * is count-preserving under the fold (it counts posting ROWS per
-    * fingerprint, not batches), so probe decisions are unchanged.
-    */
-  def compactWinnowStore(
-      spark: SparkSession,
-      indexPath: String,
-      upToBatch: Long,
-      newBuckets: Option[Int] = None
-  ): Unit = {
-    val rb = newBuckets.filter(_ >= 1)
-    compactBatchedTable(spark, indexPath, upToBatch, Seq("fb"),
-      df => {
-        val re = rb.map(n => df.select(col("id"), col("fp"),
-            pmod(xxhash64(col("fp")), lit(n)).cast("int").as("fb")))
-          .getOrElse(df.select("id", "fp", "fb"))
-        re.repartition(col("fb")).sortWithinPartitions("fp")
-      },
-      metaTag = rb.map(n => s":rb=$n").getOrElse(""),
-      afterCommit = () => rb.foreach(n => restampMarkerBuckets(spark, indexPath, n)))
-  }
-
   /** Offline compaction for the BATCH-pipeline winnowing artifact's
     * append table ([[graft.ext.Dedup.appendWinnowIndex]] with a stable
     * `appendId`): fold every `apost/aseq ≤ upToSeq` partition into ONE
@@ -2075,37 +1568,7 @@ object CdcStream {
     // count (ONE touched set prunes both), and posts is only rewritten
     // by a writeWinnowIndex rebuild — which is the batch artifact's
     // documented heavy reclaim
-    compactBatchedTable(spark, s"$indexPath/apost", upToSeq, Seq("fb"),
-      _.select("id", "fp", "fb").repartition(col("fb")).sortWithinPartitions("fp"),
-      batchCol = "aseq")
-
-  /** Offline compaction for the [[boilerplateMaintain]] count store:
-    * the store holds per-batch `(ph, n_docs)` PARTIALS that probes SUM,
-    * so the fold merges partials per paragraph key — sum-preserving,
-    * and it also shrinks the row count (a paragraph seen in k batches
-    * folds from k rows to one), not just the directory count.
-    */
-  def compactBoilerplateStore(
-      spark: SparkSession,
-      countsPath: String,
-      upToBatch: Long,
-      newBuckets: Option[Int] = None
-  ): Unit = {
-    val rb = newBuckets.filter(_ >= 1)
-    compactBatchedTable(spark, countsPath, upToBatch, Seq("pb"),
-      df => {
-        // pb is a pure function of ph, so grouping by (ph, pb) and
-        // re-deriving pb under a new count agree row-for-row
-        val re = rb
-          .map(n => df.groupBy("ph").agg(sum(col("n_docs")).as("n_docs"))
-            .withColumn("pb", pmod(xxhash64(col("ph")), lit(n)).cast("int")))
-          .getOrElse(df.groupBy("ph", "pb").agg(sum(col("n_docs")).as("n_docs")))
-        re.select("ph", "n_docs", "pb").repartition(col("pb"))
-          .sortWithinPartitions("ph")
-      },
-      metaTag = rb.map(n => s":rb=$n").getOrElse(""),
-      afterCommit = () => rb.foreach(n => restampMarkerBuckets(spark, countsPath, n)))
-  }
+    Win.compactOn(spark, s"$indexPath/apost", upToSeq, None, batchCol = "aseq")
 
   /** Offline compaction for the [[bm25IndexMaintain]] index — all three
     * sub-tables, each with its own staged fold (concurrent and
@@ -2174,14 +1637,12 @@ object CdcStream {
     var armed = false
     Overlap.all(Seq(
       () => {
-        compactBatchedTable(spark, s"$indexPath/postings", upToBatch, Seq("tb"),
-          df => TextOps.bm25AssignBlocks(
+        BatchedStore.compactTable(spark, s"$indexPath/postings", upToBatch, Seq("tb"))(df =>
+          TextOps.bm25AssignBlocks(
               df.select("doc_id", "dl", "term", "tf", "tb"), foldAvgdl, blockSize)
             .repartition(col("tb"))
             .sortWithinPartitions("term", "blk"))
-        val postingsBase = new Path(s"$indexPath/postings")
-        val fs = postingsBase.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        armed = !fs.listStatus(postingsBase)
+        armed = !Marker.fs(spark, indexPath).listStatus(new Path(s"$indexPath/postings"))
           .map(_.getPath.getName)
           .filter(_.startsWith("ingest_batch="))
           .map(_.stripPrefix("ingest_batch=").toLong)
@@ -2193,10 +1654,10 @@ object CdcStream {
             .sortWithinPartitions("term", "blk")
             .write.mode("overwrite").partitionBy("tb").parquet(s"$indexPath/blockmax")
       },
-      () => compactBatchedTable(spark, s"$indexPath/dict", upToBatch, Seq("tb"),
+      () => BatchedStore.compactTable(spark, s"$indexPath/dict", upToBatch, Seq("tb"))(
         _.groupBy("term", "tb").agg(sum(col("df")).as("df"))
           .select("term", "df", "tb").repartition(col("tb"))),
-      () => compactBatchedTable(spark, s"$indexPath/stats", upToBatch, Seq.empty,
+      () => BatchedStore.compactTable(spark, s"$indexPath/stats", upToBatch, Seq.empty)(
         _.agg(
           coalesce(sum(col("n")), lit(0L)).as("n"),
           coalesce(sum(col("sum_dl")), lit(0L)).as("sum_dl")).coalesce(1))))
@@ -2204,31 +1665,6 @@ object CdcStream {
       TextOps.writeBm25BlockMaxMarker(spark, indexPath, blockSize)
   }
 
-  /** The maintenance entry point the per-store compactors plug into —
-    * the streaming analogue of the reference's scheduled
-    * `add_retention_policy` chore (carlospsikick/timescale-cdc
-    * init.sql:71): run every compactor whose store exists under the
-    * [[ingestPipelineMaintain]] `storeRoot` layout (`counts`, `gram`,
-    * `win`, `ham` — a partial layout, e.g. a standalone
-    * [[winnowAdmitMaintain]] deployment, compacts just what it has),
-    * plus an optional [[bm25IndexMaintain]] index. Returns the store
-    * names compacted, for the caller's maintenance log.
-    *
-    * The `checkpoint` overload derives the checkpoint-safe `upToBatch`
-    * itself: the newest batch id with a COMMIT in the stream's
-    * checkpoint. Everything at or below it is fully written state; the
-    * only batch a restart can replay is `last + 1`, whose probes filter
-    * `ingest_batch < last + 1` — a bound the relabel-to-`last` fold
-    * never crosses. Run it while the stream is STOPPED (between a
-    * `StreamingQuery.stop()` and the restart — the run-while-stopped
-    * contract of every compactor); a no-commit checkpoint is a no-op.
-    *
-    * Per-batch OUTPUT tables (`clean1`, `clean2`, `wstat`, `hstat`,
-    * `sstat`, `admitted`) are deliberately NOT folded: they are the
-    * pipeline's delivered facts, never probed as state, and their
-    * retention is the consumer's policy ([[graft.log.CdcLog]]-style
-    * expiry), not a probe-cost concern.
-    */
   /** Batch-directory count past which [[maintainStores]] (at
     * `minBatchDirs = FragmentationFoldBound`) folds a store: the
     * measured fragmentation cliff (`winnow_probe_frag`: 2.98 → 30.66 s
@@ -2239,29 +1675,43 @@ object CdcStream {
   val FragmentationFoldBound: Int = 64
 
   /** Rows per hash bucket past which a fold re-buckets the store to the
-    * next power of two (buckets ∝ corpus — [[markerBucketCount]]'s
+    * next power of two (buckets ∝ corpus — the [[BatchedStore]]
     * adoption note): touched-bucket BYTES per probe stay bounded as the
     * corpus grows instead of growing ∝ N under a build-time-frozen
     * bucket count. */
   val RebucketRowsPerBucket: Long = 512L * 1024L
 
+  /** The maintenance entry point the per-store compactors plug into —
+    * the streaming analogue of the reference's scheduled
+    * `add_retention_policy` chore (carlospsikick/timescale-cdc
+    * init.sql:71): fold every store that exists under the
+    * [[ingestPipelineMaintain]] `storeRoot` layout (`counts`, `gram`,
+    * `win`, `ham` — a partial layout, e.g. a standalone
+    * [[winnowAdmitMaintain]] deployment, compacts just what it has),
+    * plus an optional [[bm25IndexMaintain]] index. Returns the store
+    * names compacted, for the caller's maintenance log.
+    *
+    * Fragmentation gate: only stores whose batch-dir count reached
+    * `minBatchDirs` are folded (1 = always). A deployment calls this at
+    * every maintenance window with [[FragmentationFoldBound]] — the
+    * check is one file listing, so the windows where nothing needs
+    * folding cost nothing and a long-running ingest never walks off the
+    * measured fragmentation cliff.
+    *
+    * Per-batch OUTPUT tables (`clean1`, `clean2`, `wstat`, `hstat`,
+    * `sstat`, `admitted`) are deliberately NOT folded: they are the
+    * pipeline's delivered facts, never probed as state, and their
+    * retention is the consumer's policy ([[graft.log.CdcLog]]-style
+    * expiry), not a probe-cost concern.
+    */
   def maintainStores(
       spark: SparkSession,
       storeRoot: String,
       upToBatch: Long,
       bm25IndexPath: Option[String],
-      minBatchDirs: Int = 1): Seq[String] = {
+      minBatchDirs: Int): Seq[String] = {
     import org.apache.hadoop.fs.Path
-    val fs = new Path(storeRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def has(sub: String) = fs.exists(new Path(s"$storeRoot/$sub"))
-    // fragmentation gate: fold only the stores whose batch-dir count
-    // reached minBatchDirs (default 1 = always, the original
-    // unconditional behavior). A deployment calls this at every
-    // maintenance window with FragmentationFoldBound — the check is one
-    // file listing, so the windows where nothing needs folding cost
-    // nothing and a long-running ingest never walks off the measured
-    // fragmentation cliff.
+    val fs = Marker.fs(spark, storeRoot)
     def fragmented(path: String): Boolean =
       fs.listStatus(new Path(path))
         .count(_.getPath.getName.startsWith("ingest_batch=")) >= minBatchDirs
@@ -2269,7 +1719,7 @@ object CdcStream {
     // RebucketRowsPerBucket, the fold re-buckets to the next power of
     // two and re-stamps the marker (probes and maintainers adopt it)
     def rebucketTarget(path: String): Option[Int] =
-      markerBucketCount(spark, path).flatMap { cur =>
+      BatchedStore.stampedBuckets(spark, path).flatMap { cur =>
         val rows = spark.read.parquet(path).count()
         if (rows <= cur.toLong * RebucketRowsPerBucket) None
         else {
@@ -2278,57 +1728,28 @@ object CdcStream {
           Some(n).filter(_ > cur)
         }
       }
-    val ran = scala.collection.mutable.ArrayBuffer.empty[String]
-    if (has("counts") && fragmented(s"$storeRoot/counts")) {
-      compactBoilerplateStore(spark, s"$storeRoot/counts", upToBatch,
-        rebucketTarget(s"$storeRoot/counts"))
-      ran += "counts"
-    }
-    if (has("gram") && fragmented(s"$storeRoot/gram")) {
-      compactSubstringStore(spark, s"$storeRoot/gram", upToBatch,
-        rebucketTarget(s"$storeRoot/gram"))
-      ran += "gram"
-    }
-    if (has("win") && fragmented(s"$storeRoot/win")) {
-      compactWinnowStore(spark, s"$storeRoot/win", upToBatch,
-        rebucketTarget(s"$storeRoot/win"))
-      ran += "win"
-    }
-    if (has("ham") && fragmented(s"$storeRoot/ham")) {
-      compactHammingStore(spark, s"$storeRoot/ham", upToBatch); ran += "ham"
-    }
-    bm25IndexPath.foreach { p => compactBm25Index(spark, p, upToBatch); ran += "bm25" }
-    ran.toSeq
+    BatchedStore.Ingest.flatMap { store =>
+      val path = s"$storeRoot/${store.name}"
+      if (!Marker.exists(spark, path) || !fragmented(path)) None
+      else { store.compact(spark, path, upToBatch, rebucketTarget(path)); Some(store.name) }
+    } ++ bm25IndexPath.map { p => compactBm25Index(spark, p, upToBatch); "bm25" }
   }
 
-  def maintainStores(spark: SparkSession, storeRoot: String, upToBatch: Long): Seq[String] =
-    maintainStores(spark, storeRoot, upToBatch, None)
-
-  /** Checkpoint-derived [[maintainStores]] — see the three-arg form. */
-  def maintainStores(
-      spark: SparkSession,
-      storeRoot: String,
-      checkpoint: String): Seq[String] =
-    maintainStores(spark, storeRoot, checkpoint, None)
-
-  def maintainStores(
-      spark: SparkSession,
-      storeRoot: String,
-      checkpoint: String,
-      bm25IndexPath: Option[String]): Seq[String] =
-    maintainStores(spark, storeRoot, checkpoint, bm25IndexPath, 1)
-
-  /** Checkpoint-derived, fragmentation-gated [[maintainStores]]: the
-    * maintenance-loop form — call at every window with `minBatchDirs =
-    * FragmentationFoldBound`; only stores whose batch-dir count reached
-    * the bound are folded.
+  /** Checkpoint-derived [[maintainStores]]: `upToBatch` is the newest
+    * batch id with a COMMIT in the stream's checkpoint. Everything at or
+    * below it is fully written state; the only batch a restart can
+    * replay is `last + 1`, whose probes filter `ingest_batch < last + 1`
+    * — a bound the relabel-to-`last` fold never crosses. Run it while
+    * the stream is STOPPED (between a `StreamingQuery.stop()` and the
+    * restart — the run-while-stopped contract of every compactor); a
+    * no-commit checkpoint is a no-op.
     */
   def maintainStores(
       spark: SparkSession,
       storeRoot: String,
       checkpoint: String,
-      bm25IndexPath: Option[String],
-      minBatchDirs: Int): Seq[String] =
+      bm25IndexPath: Option[String] = None,
+      minBatchDirs: Int = 1): Seq[String] =
     lastCommittedBatch(spark, checkpoint) match {
       case Some(upTo) =>
         maintainStores(spark, storeRoot, upTo, bm25IndexPath, minBatchDirs)

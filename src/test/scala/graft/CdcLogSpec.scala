@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.log.CdcLog
@@ -56,6 +58,56 @@ class CdcLogSpec extends SparkSpec {
     val after = CdcLog.read(spark, path).orderBy("event_id").collect().toSeq
     assert(after.map(_.toString).sorted == before.map(_.toString).sorted)
     assert(CdcLog.partitions(spark, path) == Seq("2025-06-01"))
+  }
+
+  test("compaction resumes from its committed stage after a crash that deleted the live partition") {
+    val path = tempDir("cdccompactcrash")
+    (0 until 3).foreach(_ => CdcLog.append(mkEvents(Seq(1, 1, 2)), path))
+    val before = CdcLog.read(spark, path).collect().map(_.toString).sorted.toSeq
+    // the crash state: the sorted rewrite staged and its META stamped,
+    // the live partition already deleted, the rename never run
+    val partDir = s"$path/event_date=2025-06-01"
+    val stage = s"$path/.compact-event_date=2025-06-01"
+    spark.read.parquet(partDir).coalesce(1).write.parquet(stage)
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$stage/_GRAFT_COMPACT_META"),
+      "compact:event_date=2025-06-01:v1".getBytes("UTF-8"))
+    def rmrf(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles.foreach(rmrf)
+      f.delete(); ()
+    }
+    rmrf(new java.io.File(partDir))
+    assert(CdcLog.read(spark, path).count() < before.size)
+    CdcLog.compactPartition(spark, path, "2025-06-01", targetFiles = 1)
+    assert(CdcLog.read(spark, path).collect().map(_.toString).sorted.toSeq == before,
+      "the re-run did not restore the staged rows")
+    assert(!new java.io.File(stage).exists())
+    assert(CdcLog.partitions(spark, path) == Seq("2025-06-01", "2025-06-02"))
+  }
+
+  test("append writes ts as INT64 micros without changing the caller's timestamp type") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    val key = "spark.sql.parquet.outputTimestampType"
+    val path = tempDir("cdclogtstype")
+    graft.SessionConf.withConf(spark, key -> "INT96") {
+      CdcLog.append(mkEvents(Seq(1, 2)), path)
+      assert(spark.conf.get(key) == "INT96", "append changed the caller's session conf")
+    }
+    val file = java.nio.file.Files.walk(java.nio.file.Paths.get(path)).iterator()
+      .asScala.find(_.toString.endsWith(".parquet")).get
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file.toString), spark.sparkContext.hadoopConfiguration))
+    try {
+      val ts = reader.getFooter.getFileMetaData.getSchema.getFields.asScala.find(_.getName == "ts").get.asPrimitiveType()
+      assert(ts.getPrimitiveTypeName == PrimitiveTypeName.INT64)
+      ts.getLogicalTypeAnnotation match {
+        case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+          assert(t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS)
+        case other => fail(s"ts is not a TIMESTAMP: $other")
+      }
+    } finally reader.close()
   }
 
   test("typed read exposes Dataset[ChangeEvent] with the contract intact") {

@@ -220,6 +220,28 @@ class CdcPollSourceSpec extends SparkSpec {
     assert(got == (1L to 20L))
   }
 
+  test("a partition compaction staged under .compact-event_date=<d>/ is invisible: rows stream once") {
+    val logPath = tempDir("cdcpollstage") + "/log"
+    val ckpt = tempDir("cdcpollstageckpt")
+    CdcLog.append(mkEvents(1 to 20, day = 14), logPath)
+    // what CdcLog.compactPartition leaves while it stages a partition's
+    // rewrite: a committed copy of the partition's rows in a
+    // dot-prefixed sibling of the live partition
+    val stage = new java.io.File(s"$logPath/.compact-event_date=2025-06-14")
+    assert(stage.mkdirs())
+    new java.io.File(s"$logPath/event_date=2025-06-14").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+      .foreach(f => java.nio.file.Files.copy(f.toPath, new java.io.File(stage, f.getName).toPath))
+    val q = readPoll(logPath).writeStream
+      .format("memory").queryName("pollstage")
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    val got = spark.sql("SELECT event_id FROM pollstage").as[Long].collect().sorted.toSeq
+    assert(got == (1L to 20L))
+  }
+
   test("values survive the source intact (content parity with the parquet read)") {
     val logPath = tempDir("cdcpollparity") + "/log"
     val ckpt = tempDir("cdcpollparityckpt")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.log.CdcLog
 import graft.model.ChangeEvent
-import graft.streaming.CdcStream
+import graft.streaming.{BatchedStore, CdcStream}
 
 /** EP2 delivery path as Structured Streaming: filter→project→envelope→
   * topic sink with checkpoint resume; windowed aggs with watermarks.
@@ -1082,7 +1082,7 @@ class StreamingSpec extends SparkSpec {
     applyBatch(slice(0, 80), 0L)
     applyBatch(slice(80, 160), 1L)
     val before = spark.read.parquet(idx).select("g").as[Long].collect().toSet
-    CdcStream.compactSubstringStore(spark, idx, upToBatch = 1L)
+    BatchedStore.Gram.compact(spark, idx, upToBatch = 1L)
     assert(spark.read.parquet(idx).select("g").as[Long].collect().toSet === before)
     val dirs = new java.io.File(idx).listFiles
       .filter(_.getName.startsWith("ingest_batch=")).map(_.getName).toSet
@@ -1122,7 +1122,7 @@ class StreamingSpec extends SparkSpec {
       f.delete(); ()
     }
     rmrf(new java.io.File(s"$idx/ingest_batch=1"))
-    CdcStream.compactSubstringStore(spark, idx, upToBatch = 2L)
+    BatchedStore.Gram.compact(spark, idx, upToBatch = 2L)
     assert(spark.read.parquet(idx).select("g").as[Long].collect().toSet === expected,
       "resume after mid-compaction crash lost grams")
     // a committed stage for one upToBatch must REFUSE a resume under a
@@ -1132,15 +1132,15 @@ class StreamingSpec extends SparkSpec {
     applyBatch(slice(200, 240), 4L)
     stage(3L)
     val refused = intercept[IllegalArgumentException] {
-      CdcStream.compactSubstringStore(spark, idx, upToBatch = 4L)
+      BatchedStore.Gram.compact(spark, idx, upToBatch = 4L)
     }
     assert(refused.getMessage.contains("upTo=3"),
       s"refusal must name the staged target, got: ${refused.getMessage}")
     // the refused store is untouched; finishing the staged compaction
     // and then compacting to 4 converges to the same gram set
     val expected2 = spark.read.parquet(idx).select("g").as[Long].collect().toSet
-    CdcStream.compactSubstringStore(spark, idx, upToBatch = 3L)
-    CdcStream.compactSubstringStore(spark, idx, upToBatch = 4L)
+    BatchedStore.Gram.compact(spark, idx, upToBatch = 3L)
+    BatchedStore.Gram.compact(spark, idx, upToBatch = 4L)
     assert(spark.read.parquet(idx).select("g").as[Long].collect().toSet === expected2,
       "finish-then-advance compaction changed the gram set")
     // a stage that crashed BETWEEN the fold commit and the META stamp is
@@ -1149,7 +1149,7 @@ class StreamingSpec extends SparkSpec {
     spark.read.parquet(idx).where($"ingest_batch" <= 5).select("g", "gb")
       .write.mode("overwrite").partitionBy("gb").parquet(s"$idx.compact")
     val expected3 = spark.read.parquet(idx).select("g").as[Long].collect().toSet
-    CdcStream.compactSubstringStore(spark, idx, upToBatch = 5L)
+    BatchedStore.Gram.compact(spark, idx, upToBatch = 5L)
     assert(spark.read.parquet(idx).select("g").as[Long].collect().toSet === expected3,
       "unstamped stage (crash before META) must re-derive, not lose grams")
   }
@@ -1175,7 +1175,7 @@ class StreamingSpec extends SparkSpec {
     hApply(h1, 0L); hApply(h2, 1L)
     val hRows = spark.read.parquet(s"$hb/idx")
       .select("blk", "key", "id", "hh").as[(Int, Long, Long, Long)].collect().toSet
-    CdcStream.compactHammingStore(spark, s"$hb/idx", upToBatch = 1L)
+    BatchedStore.Ham.compact(spark, s"$hb/idx", upToBatch = 1L)
     assert(spark.read.parquet(s"$hb/idx")
       .select("blk", "key", "id", "hh").as[(Int, Long, Long, Long)].collect().toSet === hRows,
       "hamming fold lost or duplicated banded rows")
@@ -1206,7 +1206,7 @@ class StreamingSpec extends SparkSpec {
     wApply(w1, 0L); wApply(w2, 1L)
     val wRows = spark.read.parquet(s"$wb/idx")
       .select("fb", "id", "fp").as[(Int, Long, Long)].collect().toSet
-    CdcStream.compactWinnowStore(spark, s"$wb/idx", upToBatch = 1L)
+    BatchedStore.Win.compact(spark, s"$wb/idx", upToBatch = 1L)
     assert(spark.read.parquet(s"$wb/idx")
       .select("fb", "id", "fp").as[(Int, Long, Long)].collect().toSet === wRows,
       "winnow fold lost or duplicated postings")
@@ -1248,8 +1248,8 @@ class StreamingSpec extends SparkSpec {
     wApply(w1, 0L); wApply(w2, 1L)
     val postingsBefore = spark.read.parquet(s"$base/idx")
       .select("id", "fp").as[(Long, Long)].collect().toSet
-    CdcStream.compactWinnowStore(spark, s"$base/idx", upToBatch = 1L, newBuckets = Some(64))
-    assert(CdcStream.markerBucketCount(spark, s"$base/idx") === Some(64),
+    BatchedStore.Win.compact(spark, s"$base/idx", upToBatch = 1L, newBuckets = Some(64))
+    assert(BatchedStore.stampedBuckets(spark, s"$base/idx") === Some(64),
       "re-bucketing fold did not re-stamp the marker")
     val folded = spark.read.parquet(s"$base/idx")
     assert(folded.select("id", "fp").as[(Long, Long)].collect().toSet === postingsBefore,
@@ -1307,7 +1307,7 @@ class StreamingSpec extends SparkSpec {
     applyBatch(doc(2L, "EDGE", "unique 2"), 1L)
     val before = spark.read.parquet(s"$base/counts")
       .groupBy("ph").agg(sum($"n_docs").as("n")).as[(String, Long)].collect().toMap
-    CdcStream.compactBoilerplateStore(spark, s"$base/counts", upToBatch = 1L)
+    BatchedStore.Counts.compact(spark, s"$base/counts", upToBatch = 1L)
     val after = spark.read.parquet(s"$base/counts")
       .groupBy("ph").agg(sum($"n_docs").as("n")).as[(String, Long)].collect().toMap
     assert(after === before, "fold changed cumulative paragraph counts")
