@@ -48,6 +48,18 @@ object Bench {
     if (failed.isEmpty) ""
     else failed.sorted.map("\"" + _ + "\"").mkString("\"failed\":[", ",", "],")
 
+  /** A gate's booked wall and spread from its trials: (min, max), or
+    * None when any trial failed. */
+  private[graft] def book(trials: Seq[Option[Double]]): Option[(Double, Double)] =
+    if (trials.isEmpty || trials.exists(_.isEmpty)) None
+    else Some((trials.flatten.min, trials.flatten.max))
+
+  /** The JSON field of every gate's trial spread, `[min,max]` seconds. */
+  private[graft] def spreadField(spread: Seq[(String, (Double, Double))],
+      fmt: Double => String): String =
+    spread.map { case (k, (lo, hi)) => "\"" + k + "\":[" + fmt(lo) + "," + fmt(hi) + "]" }
+      .mkString(""""spread":{""", ",", "},")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -166,31 +178,19 @@ object Bench {
       spark.catalog.clearCache()
       (t, jobs)
     }
+    // every gate gets the same `runs` trials and books their min; the max
+    // rides along as the gate's spread, so a noisy gate shows up as a wide
+    // spread instead of being re-run until it reads fast (a re-run for
+    // slow gates only drew their min from more samples than the rest's)
     val jobsOfMin = scala.collection.mutable.Map[String, Long]()
-    val firstPass = selected.flatMap { case (name, fn) =>
+    val spreadOf = scala.collection.mutable.Map[String, (Double, Double)]()
+    val results = selected.flatMap { case (name, fn) =>
       val trials = (1 to runs).map(_ => timeOnce(name, fn))
-      if (trials.exists(_._1.isEmpty)) None
-      else {
-        val best = trials.minBy(_._1.get)
-        jobsOfMin(name) = best._2
-        Some((name, fn, best._1.get))
+      book(trials.map(_._1)).map { case spread @ (best, _) =>
+        jobsOfMin(name) = trials.find(_._1.contains(best)).get._2
+        spreadOf(name) = spread
+        name -> best
       }
-    }
-    // outlier re-run: this host shows occasional 2-10x noise (steal /
-    // noisy neighbor) that can survive even best-of-2. Any query whose min
-    // still exceeds 2x the suite median gets a third trial so a recorded
-    // number is never a transient the next clean run would halve.
-    val median = {
-      val sorted = firstPass.map(_._3).sorted
-      if (sorted.isEmpty) 0.0 else sorted(sorted.size / 2)
-    }
-    val results = firstPass.flatMap { case (name, fn, t) =>
-      if (t > 2 * median && t > 1.0) timeOnce(name, fn) match {
-        case (None, _)                => None
-        case (Some(t2), j2) if t2 < t => jobsOfMin(name) = j2; Some(name -> t2)
-        case _                        => Some(name -> t)
-      }
-      else Some(name -> t)
     }
     val total = results.map(_._2).sum
     // cadence at the scale factor's natural rate, then under 10x row
@@ -221,13 +221,14 @@ object Bench {
       def fmt(v: Double): String = String.format(java.util.Locale.ROOT, s"%.${prec}f", Double.box(v))
       val qs = keep.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
       val om = if (omitted > 0) s""""q_omitted":$omitted,""" else ""
-      // per-gate Spark-job counts (of the min-time run) ride only the
-      // full-precision BENCH_FULL.json variant — the stdout line is
-      // budgeted to the harness tail
+      // per-gate Spark-job counts (of the min-time run) and trial spreads
+      // ride only the full-precision BENCH_FULL.json variant — the stdout
+      // line is budgeted to the harness tail
       val jb =
         if (!withJobs) ""
         else keep.map { case (k, _) => "\"" + k + "\":" + jobsOfMin.getOrElse(k, -1L) }
-          .mkString(""""jobs":{""", ",", "},")
+          .mkString(""""jobs":{""", ",", "},") +
+          spreadField(keep.map { case (k, _) => k -> spreadOf(k) }, fmt)
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,"q_total":${results.size},"calibration_sec":${fmt(calSec)},${failedField(failed.toSeq)}$om"queries":$qs,$jb$cadence"sf":"${new java.io.File(sfDir).getName}"}"""
     }
     System.err.println(s"[bench] full precision: " +

@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.{Callable, ExecutionException, Executors, Future => JFuture}
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 
 /** The engine's one way to overlap independent driver-side work. Spark
@@ -11,7 +12,9 @@ import org.apache.spark.sql.SparkSession
   * No submitted work outlives the call that submitted it: every fork
   * settles before [[all]] or [[scope]] returns or throws, so the caller's
   * cleanup (unpersisting the caches the forks read, restoring the conf
-  * they plan under) never runs under a live sibling.
+  * they plan under) never runs under a live sibling. Every fork runs under
+  * its submitter's Spark thread-locals ([[SparkLocals]]), so its jobs carry
+  * the submitter's job group, description and SQL execution.
   *
   * One daemon cached pool, unbounded, so nested calls cannot deadlock;
   * concurrency stays bounded by the handful of thunks callers submit.
@@ -24,14 +27,56 @@ object Overlap {
     t
   })
 
+  /** The Spark thread-local properties a fork's jobs carry. Pool threads
+    * are cached and each inherited these from whichever thread created
+    * it, so a fork that did not set them ran under a stale job group
+    * (which `StreamingQuery.stop()` cancels by), description, call site
+    * and SQL execution. `SparkContext.getLocalProperties` is
+    * `private[spark]`; these are the keys Spark's job, SQL and streaming
+    * layers set. */
+  private val JobProperties = Seq(
+    "spark.job.description", "spark.jobGroup.id", "spark.job.interruptOnCancel",
+    "spark.scheduler.pool", "callSite.short", "callSite.long",
+    "spark.sql.execution.id", "spark.sql.execution.root.id", "sql.streaming.queryId")
+
+  /** One thread's Spark thread-locals on `sc`: the [[JobProperties]] and
+    * the job tags. */
+  private final class SparkLocals(sc: SparkContext) {
+    private val props = JobProperties.map(sc.getLocalProperty)
+    private val tags = sc.getJobTags()
+
+    private def install(): Unit = {
+      JobProperties.zip(props).foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      sc.clearJobTags()
+      sc.addJobTags(tags)
+    }
+
+    /** Run `body` under the captured thread-locals, then put the running
+      * thread's own back. */
+    def run[A](body: => A): A = {
+      val own = new SparkLocals(sc)
+      install()
+      try body finally own.install()
+    }
+  }
+
+  /** The calling thread's thread-locals, when a live Spark context exists. */
+  private def sparkLocals(): Option[SparkLocals] =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext).filterNot(_.isStopped).map(new SparkLocals(_))
+
   final class Fork[A] private[Overlap] (private[Overlap] val task: JFuture[A])
 
   final class Scope private[Overlap] {
     private val forks = scala.collection.mutable.ArrayBuffer.empty[JFuture[_]]
 
-    /** Start `body` concurrently with the rest of the scope. */
+    /** Start `body` concurrently with the rest of the scope, under the
+      * calling thread's Spark thread-locals as they are now. */
     def fork[A](body: => A): Fork[A] = {
-      val task = pool.submit(new Callable[A] { def call(): A = body })
+      val from = sparkLocals()
+      val task = pool.submit(new Callable[A] {
+        def call(): A = from.fold(body)(_.run(body))
+      })
       forks.synchronized(forks += task)
       new Fork(task)
     }

@@ -1073,9 +1073,7 @@ object StressBench {
     val bigOps = opsAt(docs10, embs10, ivfIdx10, ivfCen10, ev10, cur10, log010, logA10,
       s"c$Replicas")
     val big0 = runAll(bigOps, Runs)
-    // Outlier re-run for the HARNESS-ASSERTED legs — the graft.Bench
-    // discipline ("any query whose min still exceeds 2x the suite
-    // median gets a third trial") applied to the scale gates: a Kx leg
+    // Outlier re-run for the HARNESS-ASSERTED legs: a Kx leg
     // whose min-of-Runs reads past its asserted bound gets ONE fresh
     // min-of-Runs window and keeps the better reading. Why: across this
     // round's cuts the SAME binary flipped hamming_admit 4.20 → 2.05 s

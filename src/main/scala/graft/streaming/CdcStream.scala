@@ -1287,21 +1287,28 @@ object CdcStream {
     // executor fails the trigger and foreachBatch redelivers it, which
     // every stage absorbs idempotently (the replay contract above).
     //
-    // PER-TRIGGER FLOOR = the critical path's sequential micro-job
-    // count (measured r14: ~15 jobs ≈ 6.9 s at a 1× batch, not I/O).
-    // Only the DOC FLOW is genuinely sequential (stage N+1's input is
-    // stage N's checkpointed output), so everything else leaves the
-    // critical path: each stage EAGERLY checkpoints its output (its
-    // compute runs once, there) and then EVERY parquet write — the four
-    // stage outputs, the four store appends (disjoint stores; nothing
-    // this trigger reads them — probes filter ingest_batch < batchId),
-    // sstat and the final admitted table — is forked off as I/O over
-    // materialized blocks, all mutually concurrent. The trigger still
-    // commits only after EVERY fork completes — the overlap scope
-    // rethrows the first failure so foreachBatch fails and redelivers,
-    // which each stage absorbs idempotently. Critical path:
-    // 4 × (touched-collect + checkpoint-compute) + the semantic screen
-    // + the slowest deferred write.
+    // PER-TRIGGER FLOOR = the critical path's sequential job count,
+    // per-job launch cost rather than data. Only the DOC FLOW is
+    // sequential (boilerplate → gram → winnow, then the perceptual and
+    // semantic finalize; stage N+1 reads stage N's checkpointed output),
+    // and it runs first. Each text stage EAGERLY checkpoints its output,
+    // so its compute runs once, there; the output-partition writes and
+    // store appends are forked as I/O over the materialized blocks. The
+    // ORDER of submission matters: Spark's default scheduler is FIFO, so
+    // a job submitted earlier takes the cores first, and a store append
+    // forked ahead of a text stage starves that stage's short jobs
+    // (measured on `local[2]`: one 19 ms winnow job took 539 ms of wall
+    // behind two appends, and stage 3 took 2.72 s instead of 1.01 s). The
+    // three text-store appends are therefore forked after stage 3's
+    // checkpoint, where they overlap only the short finalize tail; the
+    // ham append, sstat and the admitted table follow as their inputs
+    // land. Moving every write behind the semantic checkpoint instead was
+    // slower (trigger 5.71 s against 5.45 s): each append takes 1.3-1.7 s
+    // and then sits alone on the barrier. The trigger commits only after
+    // every fork completes; the overlap scope rethrows the first failure
+    // so foreachBatch fails and redelivers, which each stage absorbs
+    // idempotently. Critical path: 3 × (touched-collect + checkpoint
+    // compute) + the two finalize checkpoints + the slowest deferred write.
     // Batch-scoped shuffle width: every frame this trigger shuffles is
     // batch-sized (the maintainer contract — a 5 s poll cadence
     // delivers micro-batches), so a session width sized for
@@ -1391,53 +1398,53 @@ object CdcStream {
       val effectiveWidth = pipelineWidthFor(bCount, shuffleWidth, sessionWidth)
       if (effectiveWidth != shuffleWidth)
         spark.conf.set("spark.sql.shuffle.partitions", effectiveWidth.toString)
-      // 1. boilerplate strip (cumulative count store). keepOutput=false —
-      // the FUSION that removes one sequential job from the critical
-      // path: the boiler output is handed to stage 2 LAZILY, so stage
-      // 2's eager checkpoint computes boiler-strip + gram-probe in ONE
-      // job (the paragraph frame stays cached across both consumers),
-      // while the deferred clean1 write materializes the same
-      // deterministic plan off-path. One fewer job + checkpoint
-      // round-trip ≈ the whole stage-1 constant.
+      // 1. boilerplate strip (cumulative count store). keepOutput=true:
+      // computed once, at its checkpoint, which stage 2 and the clean1
+      // write read. Handed to stage 2 lazily instead (stage 2's
+      // checkpoint computing boiler + gram in one job), the deferred
+      // append re-ran the whole stage through the lazy frame: 9 jobs
+      // over 2.35 s beside stage 3, and 5 more jobs per trigger in all
+      // (113 against 108).
       val (clean1Raw, bpAppend) = boilerplateApplyBatchStaged(
         b.select("doc_id", "text"), batchId,
         s"$storeRoot/counts", s"$storeRoot/clean1", "doc_id", "text",
-        minDocsBoiler, "\n", numBuckets, keepOutput = false)
+        minDocsBoiler, "\n", numBuckets, keepOutput = true)
       val clean1 = clean1Raw.select(col("doc_id"), col("stripped_text").as("text"))
-      // 2. exact-substring dedup + strip (gram store)
-      // probe-broadcast hint from the count the width step already ran:
-      // counting inside the stage would force the LAZY fused clean1
-      // early and break the boiler+gram single-job fusion.
-      // NOTE (r19, measured): extending the lazy handoff one stage
-      // deeper — keepOutput=false here with a pipeline-level cache, so
-      // stage 3's checkpoint computes boiler+gram+winnow in ONE job —
-      // was tried and LOST ~0.9 s/trigger even with explicit broadcast
-      // hints restoring the join strategies (fused stage-3 job 4.3-4.9 s
-      // vs 2.2 + 1.8 s split, sf0.1 gate, same window): the heavy gram
-      // compute migrates into the winnow probe's broadcast-exchange
-      // jobs, serializing what the eager checkpoint ran as one wide job,
-      // and the un-materialized cache denies the planner the exact
-      // output stats the checkpoint provides. The stage boundary costs
-      // one ~0.15 s job launch; the lazy handoff costs more. Guide §1.1
-      // empirical loop — the checkpoint stays.
-      val (clean2Raw, gramAppend) = substringStripApplyBatchStaged(
-        clean1, batchId, s"$storeRoot/gram", s"$storeRoot/clean2",
-        k, hashKey, numBuckets, keepOutput = true,
-        broadcastProbe = Some(bCount <= graft.ext.Dedup.ProbeBroadcastMaxBatchRows))
-      // the boiler append is deferred only HERE — after stage 2's eager
-      // checkpoint has consumed the lazy boiler output — because its
-      // finally releases the paragraph cache that checkpoint scans
-      s.fork(bpAppend())
-      s.fork(gramAppend())
-      val clean2 = clean2Raw.select(col("doc_id"), col("stripped_text"))
-      // 3. winnowing fuzzy-text admission (fingerprint store)
-      val (wstatRaw, winAppend) = winnowAdmitApplyBatchStaged(
-        clean2.select(col("doc_id"), col("stripped_text").as("text")), batchId,
-        s"$storeRoot/win", s"$storeRoot/wstat", "doc_id", "text",
-        w, windowSize, minShared, maxDf, numBuckets, portable, keepOutput = true,
-        broadcastProbe = Some(bCount <= graft.ext.Dedup.ProbeBroadcastMaxBatchRows))
-      s.fork(winAppend())
-      val wstat = wstatRaw.select(col("id").as("doc_id"), col("status").as("winnow_status"))
+      // the text stages' deferred appends are forked once stage 3 has
+      // checkpointed (FIFO, above), and also when stage 2 or 3 throws:
+      // each append owns its stage's cache release, the scope settles it
+      // before the failure is rethrown, and its writes are replay-safe
+      val textAppends = scala.collection.mutable.ArrayBuffer(bpAppend)
+      val (clean2, wstat) = try {
+        // 2. exact-substring dedup + strip (gram store)
+        // probe-broadcast hint from the count the width step already ran
+        // NOTE (r19, measured): extending the lazy handoff one stage
+        // deeper — keepOutput=false here with a pipeline-level cache, so
+        // stage 3's checkpoint computes boiler+gram+winnow in ONE job —
+        // was tried and LOST ~0.9 s/trigger even with explicit broadcast
+        // hints restoring the join strategies (fused stage-3 job 4.3-4.9 s
+        // vs 2.2 + 1.8 s split, sf0.1 gate, same window): the heavy gram
+        // compute migrates into the winnow probe's broadcast-exchange
+        // jobs, serializing what the eager checkpoint ran as one wide
+        // job, and the un-materialized cache denies the planner the exact
+        // output stats the checkpoint provides. The stage boundary costs
+        // one ~0.15 s job launch; the lazy handoff costs more. Guide §1.1
+        // empirical loop — the checkpoint stays.
+        val (clean2Raw, gramAppend) = substringStripApplyBatchStaged(
+          clean1, batchId, s"$storeRoot/gram", s"$storeRoot/clean2",
+          k, hashKey, numBuckets, keepOutput = true,
+          broadcastProbe = Some(bCount <= graft.ext.Dedup.ProbeBroadcastMaxBatchRows))
+        textAppends += gramAppend
+        val clean2 = clean2Raw.select(col("doc_id"), col("stripped_text"))
+        // 3. winnowing fuzzy-text admission (fingerprint store)
+        val (wstatRaw, winAppend) = winnowAdmitApplyBatchStaged(
+          clean2.select(col("doc_id"), col("stripped_text").as("text")), batchId,
+          s"$storeRoot/win", s"$storeRoot/wstat", "doc_id", "text",
+          w, windowSize, minShared, maxDf, numBuckets, portable, keepOutput = true,
+          broadcastProbe = Some(bCount <= graft.ext.Dedup.ProbeBroadcastMaxBatchRows))
+        textAppends += winAppend
+        (clean2, wstatRaw.select(col("id").as("doc_id"), col("status").as("winnow_status")))
+      } finally textAppends.foreach(append => s.fork(append()))
       val surv3 = wstat.where(col("winnow_status") === "new").select("doc_id")
       // 4. perceptual admission FINALIZE: restrict the speculative
       // full-batch artifacts to the winnow survivors — snapshot hits are

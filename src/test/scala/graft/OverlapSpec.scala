@@ -75,6 +75,30 @@ class OverlapSpec extends SparkSpec {
     assert(got == (0 until n).map(i => i * 30 + 3))
   }
 
+  test("a fork runs under its submitter's Spark thread-locals, not its pool thread's") {
+    val sc = spark.sparkContext
+    val desc = "spark.job.description"
+    val group = "spark.jobGroup.id"
+    def inFork() = Overlap.all(Seq(() =>
+      (sc.getLocalProperty(desc), sc.getLocalProperty(group), sc.getJobTags())))
+    try {
+      sc.setJobGroup("first-group", "first-caller")
+      sc.addJobTag("first-tag")
+      inFork() // the pool thread now exists, created under the first caller's
+      Thread.sleep(100) // ... and is idle again, so the next fork reuses it
+      sc.setJobGroup("second-group", "second-caller")
+      sc.removeJobTag("first-tag")
+      sc.addJobTag("second-tag")
+      assert(inFork().head === (("second-caller", "second-group", Set("second-tag"))))
+      sc.clearJobGroup()
+      sc.clearJobTags()
+      assert(inFork().head === ((null, null, Set.empty[String])))
+    } finally {
+      sc.clearJobGroup()
+      sc.clearJobTags()
+    }
+  }
+
   test("withConf unsets a never-set key and restores a set one, also when the body throws") {
     val never = "spark.graft.test.neverSet"
     val set = "spark.graft.test.set"
